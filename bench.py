@@ -277,7 +277,7 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = get_spark("ioc-etl-bench")
     spark.sparkContext.setLogLevel("WARN")
     queries = entrymod.queries()

@@ -1,9 +1,11 @@
 """IOC extraction kernel — the reference's core competency, as native
 column expressions (SURVEY.md §2.8 T1-T12).
 
-Every function here returns a Column built only from JVM-side
-``pyspark.sql.functions`` — no Python UDFs — so the whole kernel stays
-inside whole-stage codegen and scales linearly with executors.
+Every function here builds only JVM-side ``pyspark.sql.functions``
+expressions — no Python UDFs — so the whole kernel stays inside
+whole-stage codegen and scales linearly with executors.  All but
+``explode_iocs`` (the batch/stream long-table projection) return a
+Column.
 
 Regex semantics are taken verbatim from the reference:
   - batch patterns:  /root/reference/h-isac.py:70-73
@@ -29,7 +31,7 @@ fixes, each unit-tested):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --- extraction patterns (h-isac.py:70-73, verbatim) ---------------------
@@ -49,6 +51,8 @@ HASH_PLAIN = r"^[a-fA-F0-9]{32,64}$"
 # classification patterns (sort_iocs parity, firehose.py:82-103)
 _CLASSIFY_IP = r"^(?:\d{1,3}\.){3}\d{1,3}$"
 _CLASSIFY_HASH = r"^[a-zA-Z0-9]{32,64}$"  # note: non-hex admitted, as in firehose.py:97
+
+IOC_TYPES = ("ip", "hash", "url", "email")  # extract_iocs keys, in order
 
 REPLY_MARKER = "From: H-ISAC Amber"
 # (?s) so .* spans lines; (^|\n) anchors the cut at the *start* of the first
@@ -99,7 +103,10 @@ def extract_iocs(body: Column) -> dict[str, Column]:
     refang applied to ips/urls/emails and mailto stripped from emails —
     exactly the post-processing at h-isac.py:82-84 (hashes are left as-is).
     """
-    cleaned = clean_text(body)
+    return _extract_cleaned(clean_text(body))
+
+
+def _extract_cleaned(cleaned: Column) -> dict[str, Column]:
     return {
         "ip": F.transform(extract_all(cleaned, IP_PATTERN), refang),
         "hash": extract_all(cleaned, HASH_PATTERN),
@@ -108,6 +115,40 @@ def extract_iocs(body: Column) -> dict[str, Column]:
             extract_all(cleaned, EMAIL_PATTERN), lambda e: strip_mailto(refang(e))
         ),
     }
+
+
+def explode_iocs(
+    df: DataFrame, text: Column, platform: str, **carry: Column
+) -> DataFrame:
+    """The canonical 8-column long IOC table (README.md:13-29): one row
+    per (message, type, ioc), shared by the batch and stream paths.
+
+    ``carry`` names the per-message columns ``id``, ``date_added``,
+    ``date_received``, ``source`` and ``tag``.  The reply cut is projected
+    once per message before the four extractions read it: inlined into
+    the explode's Generate, which has no subexpression elimination, it
+    would run once per pattern.
+    """
+    msgs = df.select(
+        *(c.alias(n) for n, c in carry.items()), clean_text(text).alias("cleaned")
+    )
+    iocs = _extract_cleaned(F.col("cleaned"))
+    pairs = F.array(
+        *(
+            F.struct(F.lit(t).alias("type"), arr.alias("iocs"))
+            for t, arr in iocs.items()
+        )
+    )
+    return msgs.select(*carry, F.explode(pairs).alias("p")).select(
+        "id",
+        "date_added",
+        "date_received",
+        F.explode(F.col("p.iocs")).alias("ioc"),
+        F.lit(platform).alias("platform"),
+        "source",
+        "tag",
+        F.col("p.type").alias("type"),
+    )
 
 
 def extract_host(ioc: Column) -> Column:

@@ -68,25 +68,15 @@ def ioc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical 8-column IOC table (README.md:13-29) from the feed."""
     feed = synthetic_feed(spark, sf_dir)
     filtered = feed.filter(F.lower(F.col("subject")).contains("indicator"))
-    iocs = K.extract_iocs(F.col("body"))
-    pairs = F.array(
-        F.struct(F.lit("ip").alias("type"), iocs["ip"].alias("iocs")),
-        F.struct(F.lit("hash").alias("type"), iocs["hash"].alias("iocs")),
-        F.struct(F.lit("url").alias("type"), iocs["url"].alias("iocs")),
-        F.struct(F.lit("email").alias("type"), iocs["email"].alias("iocs")),
-    )
-    return (
-        filtered.select("id", "source", "date_received", F.explode(pairs).alias("p"))
-        .select(
-            "id",
-            F.lit(RUN_DATE).alias("date_added"),
-            "date_received",
-            F.explode(F.col("p.iocs")).alias("ioc"),
-            F.lit("H-ISAC").alias("platform"),
-            "source",
-            F.lit("N/A").alias("tag"),
-            F.col("p.type").alias("type"),
-        )
+    return K.explode_iocs(
+        filtered,
+        F.col("body"),
+        "H-ISAC",
+        id=F.col("id"),
+        date_added=F.lit(RUN_DATE),
+        date_received=F.col("date_received"),
+        source=F.col("source"),
+        tag=F.lit("N/A"),
     )
 
 

@@ -5039,6 +5039,13 @@ def q_nn_graph_serve_recall_table(
     broadcast-centroid routing join and swaps the global seed set for
     a cell-sized per-query one); the brute exact leg is the
     fixture-bounded oracle check."""
+    hop_counts = {h for h, _b, _mode in _GSA_SETTINGS}
+    if len(hop_counts) != 1:
+        raise ValueError(
+            "nn_graph_serve_recall_table runs every _GSA_SETTINGS row in one "
+            f"beam chain, so all rows need one hop count; got {sorted(hop_counts)}"
+        )
+    (hops,) = hop_counts
     emb = load_table(spark, sf_dir, "embeddings")
     ccomp = (
         emb.select(
@@ -5132,9 +5139,9 @@ def q_nn_graph_serve_recall_table(
         aseeds = rc.join(assign3, "cid").select(
             "qid", F.col("vec_id").alias("u")
         )
-        # All three settings share h=4, so they run as ONE cfg-tagged
-        # chain: 4 hop barriers total instead of 4 per setting (r15;
-        # each setting's visited set is byte-identical to its own
+        # All three settings share h=4 (checked on entry), so they run
+        # as ONE cfg-tagged chain: 4 hop barriers total instead of 4 per
+        # setting (r15; each setting's visited set is byte-identical to its own
         # chain — the cfg tag is in every key).
         seed_pairs = None
         for cfg, (_h, _b, mode) in enumerate(_GSA_SETTINGS):
@@ -5144,7 +5151,6 @@ def q_nn_graph_serve_recall_table(
             )
             seed_pairs = sp if seed_pairs is None else seed_pairs.unionByName(sp)
         bw = {cfg: s[1] for cfg, s in enumerate(_GSA_SETTINGS)}
-        hops = _GSA_SETTINGS[0][0]
         return _gs_beam_multi(seed_pairs, bw, qarr, tarr, edges, hops)
 
     # The exact-audit leg and the (IVF train → unified beam chain) leg

@@ -5,9 +5,12 @@ flushes 1 000-record JSON batches (h-isac.py:11-44); its streaming path
 posts one HTTPS request per IOC (firehose.py:131-133).  Here both become
 partition-parallel batched writers: ``to_json(struct(*))`` happens
 JVM-side (eliminating the injection-prone string templating at
-firehose.py:126-128), and each partition independently buffers and
-flushes ``batch_size`` records, so sink throughput scales with executor
-count instead of being a single synchronous loop.
+firehose.py:126-128), the payloads cross to the Python worker as Arrow
+record batches (one string column, no per-row pickling), and each
+partition independently buffers and flushes ``batch_size`` records, so
+sink throughput scales with executor count instead of being a single
+synchronous loop.  ``post_batched`` is the sink as a pass-through stage,
+so a caller can aggregate what was posted in the same job.
 
 The HTTP transport is injectable (``poster``) — tests inject a collector;
 a real deployment injects a requests-based poster with auth.  No network
@@ -16,7 +19,7 @@ I/O happens in this module by default.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -25,11 +28,44 @@ from pyspark.sql import functions as F
 SPLUNK_BATCH_LIMIT = 1000  # Splunk batch_save cap (h-isac.py:34-36)
 
 
-def rows_to_json(df: DataFrame) -> DataFrame:
+def rows_to_json(df: DataFrame, *keep: str) -> DataFrame:
     """Serialize every row to a JSON string column JVM-side (T15) —
     replaces the per-row ``data.loc[row, :].to_json()`` loop
-    (h-isac.py:31-32)."""
-    return df.select(F.to_json(F.struct(*df.columns)).alias("payload"))
+    (h-isac.py:31-32).  ``keep`` columns ride along after ``payload``."""
+    return df.select(F.to_json(F.struct(*df.columns)).alias("payload"), *keep)
+
+
+def post_batched(
+    df: DataFrame,
+    poster: Callable[[list[str]], Any],
+    batch_size: int = SPLUNK_BATCH_LIMIT,
+    keep: Sequence[str] = (),
+) -> DataFrame:
+    """Batched KV sink (S5) as a lazy pass-through stage: per-partition
+    buffering with ``batch_size`` flushes + a final remainder flush — the
+    exact batching contract of h-isac.py:31-43, parallel across
+    partitions.  Batches span Arrow record-batch boundaries.
+
+    Returns the ``keep`` columns of every posted row; nothing is posted
+    until an action runs the returned frame.  ``poster`` receives a list
+    of JSON strings (one batch).  It must be picklable (it runs on
+    executors); its exceptions fail the task.
+    """
+
+    def post(batches: Iterator[Any]) -> Iterator[Any]:
+        buf: list[str] = []
+        for rb in batches:
+            buf.extend(rb.column(0).to_pylist())
+            full = len(buf) - len(buf) % batch_size
+            for i in range(0, full, batch_size):
+                poster(buf[i : i + batch_size])
+            del buf[:full]
+            if keep:
+                yield rb.select(keep)
+        if buf:  # remainder flush (h-isac.py:41-43)
+            poster(buf)
+
+    return rows_to_json(df, *keep).mapInArrow(post, df.select(*keep).schema)
 
 
 def write_kv_batched(
@@ -37,25 +73,11 @@ def write_kv_batched(
     poster: Callable[[list[str]], Any],
     batch_size: int = SPLUNK_BATCH_LIMIT,
 ) -> None:
-    """Batched KV sink (S5): per-partition buffering with ``batch_size``
-    flushes + a final remainder flush — the exact batching contract of
-    h-isac.py:31-43, parallel across partitions.
-
-    ``poster`` receives a list of JSON strings (one batch).  It must be
-    picklable (it runs on executors).
-    """
-
-    def flush_partition(rows: Iterator[Any]) -> None:
-        buf: list[str] = []
-        for row in rows:
-            buf.append(row.payload)
-            if len(buf) == batch_size:
-                poster(buf)
-                buf = []
-        if buf:  # remainder flush (h-isac.py:41-43)
-            poster(buf)
-
-    rows_to_json(df).foreachPartition(flush_partition)
+    """Post every row of ``df`` through ``post_batched`` (one job, a
+    ``noop`` write drives the stage)."""
+    post_batched(df, poster, batch_size).write.format("noop").mode(
+        "overwrite"
+    ).save()
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:

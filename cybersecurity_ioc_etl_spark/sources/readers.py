@@ -143,41 +143,34 @@ def synthetic_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted (h-isac.py:51-67); every 7th doc gets a non-"indicator"
     subject (filter parity with h-isac.py:158).
     """
-    d = F.col("doc_id")
-    ip = F.concat(
-        (d % 223 + 1).cast("string"), F.lit("[.]"),
-        (d % 251).cast("string"), F.lit("."),
-        (d % 17).cast("string"), F.lit("[.]"),
-        (d % 254 + 1).cast("string"),
+    return load_table(spark, sf_dir, "documents", fan_out=True).selectExpr(
+        *FEED_SELECT_SQL
     )
-    url = F.concat(F.lit("hxxps://www[.]host"), (d % 50).cast("string"), F.lit("[.]example/c"))
-    email = F.concat(
-        F.when(d % 3 == 0, F.lit("mailto:")).otherwise(F.lit("")),
-        F.lit("analyst"), (d % 20).cast("string"), F.lit("@corp.example[.]com"),
-    )
-    reply = F.when(
-        d % 5 == 0,
-        F.concat(
-            F.lit("\nFrom: H-ISAC Amber\nquoted 9[.]9[.]9[.]9 "),
-            F.md5(F.concat(F.col("text"), F.lit("q"))),
-        ),
-    ).otherwise(F.lit(""))
-    body = F.concat(
-        F.concat_ws(" ", F.col("text"), ip, url, email, F.md5(F.col("text"))), reply
-    )
-    subject = F.when(d % 7 == 0, F.lit("FYI general news")).otherwise(
-        F.lit("H-ISAC Indicator Digest")
-    )
-    received = F.date_format(
-        F.date_add(F.to_date(F.lit("2024-01-01")), (d % 365).cast("int")), "yyyy-MM-dd"
-    )
-    return load_table(spark, sf_dir, "documents", fan_out=True).select(
-        F.concat(F.lit("DOC-"), d.cast("string")).alias("id"),
-        F.col("source"),
-        subject.alias("subject"),
-        received.alias("date_received"),
-        body.alias("body"),
-    )
+
+
+# The feed as Spark SQL select items: one planning call instead of a
+# py4j round trip per Column-builder call.  Lockstep with FEED_CTE_SQL
+# below, line for line; tests/test_oracle_parity.py enforces it.
+FEED_SELECT_SQL = (
+    "'DOC-' || CAST(doc_id AS STRING) AS id",
+    "source",
+    """CASE WHEN doc_id % 7 = 0 THEN 'FYI general news'
+         ELSE 'H-ISAC Indicator Digest' END AS subject""",
+    """date_format(DATE '2024-01-01' + CAST(doc_id % 365 AS INT),
+                'yyyy-MM-dd') AS date_received""",
+    """concat_ws(' ',
+      text,
+      CAST(doc_id % 223 + 1 AS STRING) || '[.]' || CAST(doc_id % 251 AS STRING)
+        || '.' || CAST(doc_id % 17 AS STRING) || '[.]' || CAST(doc_id % 254 + 1 AS STRING),
+      'hxxps://www[.]host' || CAST(doc_id % 50 AS STRING) || '[.]example/c',
+      (CASE WHEN doc_id % 3 = 0 THEN 'mailto:' ELSE '' END)
+        || 'analyst' || CAST(doc_id % 20 AS STRING) || '@corp.example[.]com',
+      md5(text)
+    ) || CASE WHEN doc_id % 5 = 0
+              THEN chr(10) || 'From: H-ISAC Amber' || chr(10)
+                   || 'quoted 9[.]9[.]9[.]9 ' || md5(text || 'q')
+              ELSE '' END AS body""",
+)
 
 
 # DuckDB mirror of synthetic_feed — prepended (as a CTE named `feed`) to

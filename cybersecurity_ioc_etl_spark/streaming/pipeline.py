@@ -127,29 +127,15 @@ def tweets_to_ioc_rows(tweets: DataFrame) -> DataFrame:
     """Tweet projection → canonical long IOC table (stream flavour of the
     batch explode; unified 8-column contract per SURVEY §1.1, with the
     stream path gaining refang + email extraction — documented fix)."""
-    iocs = K.extract_iocs(F.col("text"))
-    pairs = F.array(
-        F.struct(F.lit("ip").alias("type"), iocs["ip"].alias("iocs")),
-        F.struct(F.lit("hash").alias("type"), iocs["hash"].alias("iocs")),
-        F.struct(F.lit("url").alias("type"), iocs["url"].alias("iocs")),
-        F.struct(F.lit("email").alias("type"), iocs["email"].alias("iocs")),
-    )
-    return tweets.select(
-        F.col("id").cast("string").alias("id"),
-        F.col("created_at").alias("date_added"),
-        F.lit(None).cast("string").alias("date_received"),
-        F.col("source"),
-        F.coalesce(F.array_join("tags", ";"), F.lit("N/A")).alias("tag"),
-        F.explode(pairs).alias("p"),
-    ).select(
-        "id",
-        "date_added",
-        "date_received",
-        F.explode(F.col("p.iocs")).alias("ioc"),
-        F.lit("twitter").alias("platform"),
-        "source",
-        "tag",
-        F.col("p.type").alias("type"),
+    return K.explode_iocs(
+        tweets,
+        F.col("text"),
+        "twitter",
+        id=F.col("id").cast("string"),
+        date_added=F.col("created_at"),
+        date_received=F.lit(None).cast("string"),
+        source=F.col("source"),
+        tag=F.coalesce(F.array_join("tags", ";"), F.lit("N/A")),
     )
 
 

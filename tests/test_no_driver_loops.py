@@ -25,7 +25,7 @@ PRAGMA = re.compile(r"#\s*driver-ok:\s*\S")
 # file → reason a driver-side materialization is legitimate there
 ALLOWED = {
     "sinks/kv.py": "compact_parquet samples ONE aggregated row (avg width) to size output files",
-    "batch.py": "run_hisac_batch returns run metrics: collects the 4-row per-type count (bounded by #IOC types, never by data)",
+    "batch.py": "run_hisac_batch returns run metrics: collects ONE row of per-type sums and the message count (bounded by #IOC types, never by data)",
     "plans/inspect.py": "formatted_plan(execute=True) intentionally executes the frame so AQE materializes the final plan — a debugging/CI tool, not an operator",
     "corpus_export.py": "run_corpus_export returns run metrics: collects the ONE-row sum of the per-source manifest (bounded by #sources, never by data)",
     "sinks/bucketed.py": "write_zordered collects the ONE-row min/max bounds used to normalize the interleave domain",

@@ -58,6 +58,22 @@ def test_flagship_pipeline_is_all_jvm(spark, sf_dir):
     assert "[codegen id :" in p  # whole-stage codegen spans present
 
 
+def test_reply_cut_evaluated_once_per_message(spark, sf_dir):
+    """Batch and stream extraction project the reply cut once and run
+    the four IOC regexes against that column: the cut occurs once in
+    each executed plan, not once per regex (a Generate has no
+    subexpression elimination)."""
+    from cybersecurity_ioc_etl_spark.functions.ioc import _REPLY_CUT
+
+    for name in ("ioc_flagship", "tweet_batch_pipeline"):
+        df = QUERIES[name](spark, sf_dir)
+        df.collect()
+        executed = df._jdf.queryExecution().executedPlan()
+        if executed.nodeName() == "AdaptiveSparkPlan":  # drop AQE's initial plan
+            executed = executed.finalPhysicalPlan()
+        assert executed.toString().count(_REPLY_CUT) == 1, name
+
+
 def test_range_join_is_keyed_not_cartesian(spark, sf_dir):
     p = plan(spark, sf_dir, "click_error_range_join")
     assert "CartesianProduct" not in p
@@ -80,10 +96,10 @@ def test_ivf_probe_sides_are_broadcast(spark, sf_dir):
 
 
 def test_cached_frame_reused_by_second_consumer(spark, sf_dir):
-    """The flagship pipeline feeds both the IOC table sink and the
-    metrics aggregation; caching the canonical table makes the second
-    consumer an InMemoryTableScan instead of re-running extraction —
-    the multi-consumer pattern at scale."""
+    """When one IOC table feeds two actions (the batch pipeline's CSV and
+    splunkkv forks: the write, then the run counts), caching it makes
+    the second consumer an InMemoryTableScan instead of re-running
+    extraction — the multi-consumer pattern at scale."""
     from cybersecurity_ioc_etl_spark.operators.ioc_queries import ioc_table
 
     cached = ioc_table(spark, sf_dir).cache()
@@ -1736,6 +1752,21 @@ def test_nn_graph_serve_recall_receipt(spark, sf_dir):
     # beam-bounded serve: well under half the corpus visited even at
     # fixture scale (fraction falls as 1/n at constant beam work)
     assert all(r.n_visited < 0.4 * n_nodes for r in rows)
+
+
+def test_recall_table_refuses_mixed_hop_counts(spark, sf_dir, monkeypatch):
+    """The recall table runs all settings in one beam chain with one hop
+    count; a setting with another hop count must fail loudly, not run
+    at the first setting's count."""
+    import pytest
+
+    from cybersecurity_ioc_etl_spark.operators import similarity
+
+    monkeypatch.setattr(
+        similarity, "_GSA_SETTINGS", [(4, 2, "stride"), (3, 8, "stride")]
+    )
+    with pytest.raises(ValueError, match="hop count"):
+        QUERIES["nn_graph_serve_recall_table"](spark, sf_dir)
 
 
 def test_rq_codebooks_broadcast_and_errors_monotone(spark, sf_dir):

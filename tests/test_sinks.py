@@ -55,6 +55,34 @@ def test_kv_batching_is_per_partition(spark):
     assert len(batches) <= 4  # at most one flush per partition
 
 
+def test_kv_batches_span_arrow_record_batches(spark):
+    """Batches stay exactly ``batch_size`` when the rows reach the
+    Python worker as several Arrow record batches (4 rows each here)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "4")
+    try:
+        df = spark.range(10).select(F.col("id").alias("ioc")).repartition(1)
+        out = tempfile.mkdtemp(prefix="kv_")
+        write_kv_batched(df, _dir_poster(out), batch_size=3)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    batches = _batches(out)
+    assert sorted(len(b) for b in batches) == [1, 3, 3, 3]
+    assert sorted(json.loads(p)["ioc"] for b in batches for p in b) == list(range(10))
+
+
+def test_kv_empty_frame_never_posts(spark):
+    def poster(batch):
+        raise AssertionError("poster called for an empty frame")
+
+    df = spark.range(10).select(F.col("id").alias("ioc")).filter("ioc < 0")
+    write_kv_batched(df.repartition(2), poster, batch_size=3)
+
+
 def test_json_payload_injection_safe(spark):
     """A quote inside a field must survive — the reference's string
     templating (firehose.py:126) breaks here; to_json must not."""
