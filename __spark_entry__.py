@@ -240,11 +240,14 @@ _DRIVER_CHECKED = frozenset(
     }
 )
 
-# Head of the rotation: queries whose OUTPUT CHANGED this round and
-# therefore need a fresh driver hash despite being in _DRIVER_CHECKED
-# (r15: none — optimization round 2 changes no query's output by
-# contract; add here only if a restructure forces a fresh hash).
-_PRIORITY: list[str] = []
+# Head of the rotation: queries whose OUTPUT CHANGED or whose plan was
+# rewritten, and which therefore need a fresh driver hash despite being
+# in _DRIVER_CHECKED.  r16: the r15 fold rewrites (collected Louvain
+# fold, cfg-tagged beam chain) were only checked locally, so the
+# driver re-hashes one representative of each.
+_PRIORITY: list[str] = [
+    "trade_louvain_two_level", "nn_graph_serve_recall_table",
+]
 
 # High-value re-confirmations filling leftover window slots after the
 # head + any new round-15 queries.  Recency recomputed from the r1-r14
@@ -252,9 +255,11 @@ _PRIORITY: list[str] = []
 # r8×50, r9×50, r10×50, r11×49, r12×50, r13×47, r14×50.  This window
 # finishes the r7-latest remainder (29 rows, alphabetical from
 # hits_hubs_authorities) then starts the r8-latest tranche (first 21 of
-# 50, alphabetical).  Optimization rounds add no queries, so the gate's
-# 50-row cut should land exactly at inverted_index_postings; the r8
-# remainder (29 rows from ivf_multiprobe_topk) rolls to r16.
+# 50, alphabetical).  Optimization rounds add no queries; behind the
+# r16 2-row _PRIORITY head the gate's 50-row cut lands at
+# funnel_three_step_strict, so incremental_agg_maintenance,
+# inverted_index_postings and the r8 remainder (29 rows from
+# ivf_multiprobe_topk) roll to the next window.
 _RECONFIRM = [
     # r7-latest remainder (29 rows, alphabetical)
     "hits_hubs_authorities", "hll_register_audit",

@@ -489,10 +489,7 @@ def main() -> None:
         import hashlib
 
         t0 = time.perf_counter()
-        upsert_legs: dict = {}
-        segments, cent = build_ivfpq_upsert_segments(
-            spark, sf_dir, leg_out=upsert_legs
-        )
+        segments, cent = build_ivfpq_upsert_segments(spark, sf_dir)
         prefix = "ivfpqc_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
         merged = compact_ivfpq_segments(spark, segments, f"{prefix}_merged")
         build_s = time.perf_counter() - t0
@@ -505,33 +502,6 @@ def main() -> None:
         print(
             f"# leg ivfpq_compacted_topk: build_compact={build_s:.3f}s"
             f" serve={serve_s:.3f}s",
-            file=sys.stderr,
-        )
-        # ivfpq_upsert_topk: the rare train+write leg vs the per-batch
-        # upsert leg (VERDICT r10 item 8)
-        print(
-            "# leg ivfpq_upsert_topk:"
-            f" build={upsert_legs.get('build_s', float('nan')):.3f}s"
-            f" upsert={upsert_legs.get('upsert_s', float('nan')):.3f}s"
-            f" serve={serve_s:.3f}s",
-            file=sys.stderr,
-        )
-        # stream_dedup_evicting: fixture staging (test scaffolding) vs
-        # actual stream drain (VERDICT r10 item 8)
-        _drop_checkpoints()
-        from cybersecurity_ioc_etl_spark.streaming.pipeline import (
-            run_dedup_evicting_stream,
-        )
-
-        evict_legs: dict = {}
-        run_dedup_evicting_stream(
-            spark, sf_dir, delay="12 hours", n_batches=6,
-            leg_out=evict_legs,
-        ).count()
-        print(
-            "# leg stream_dedup_evicting:"
-            f" staging={evict_legs.get('staging_s', float('nan')):.3f}s"
-            f" drain={evict_legs.get('drain_s', float('nan')):.3f}s",
             file=sys.stderr,
         )
         # trade_modularity_score: LPA label build (training, rare) vs

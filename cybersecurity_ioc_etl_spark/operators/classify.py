@@ -20,9 +20,12 @@ is a genuine generalization measure.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_legs
 from ..sources.readers import load_table
 from .dedup import _ASCII_FOLD_SQL, _SHINGLE_INT_SQL, _shingle_int, ascii_fold
 from .registry import query
@@ -639,14 +642,9 @@ def q_lang_classifier_cv_folds(
     # build them from a driver thread pool (guide §2.6) so their
     # barrier jobs back-fill each other's stragglers; the union is
     # assembled in fold order, identical to the sequential plan.
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=_CV_K) as pool:
-        frames = list(pool.map(_fold_leg, range(_CV_K)))
+    frames = run_legs(
+        spark, *(functools.partial(_fold_leg, f) for f in range(_CV_K))
+    )
     rows = frames[0]
     for fr in frames[1:]:
         rows = rows.unionByName(fr)

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_legs
 from ..sources.readers import load_table
 from .registry import query
 
@@ -2818,19 +2819,12 @@ def q_incremental_cc_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoints while building): run them from a 2-thread driver
     # pool (guide §2.6) so one chain's tasks back-fill the other's
     # stragglers; results identical to the sequential order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_fold = pool.submit(incremental_cc_fold, spark, sf_dir)
-        fut_re = pool.submit(neardup_components, spark, sf_dir)
-        folded = fut_fold.result()
-        recomputed = fut_re.result().select(
-            "doc_id", F.col("component").alias("rc")
-        )
+    folded, recomputed = run_legs(
+        spark,
+        lambda: incremental_cc_fold(spark, sf_dir),
+        lambda: neardup_components(spark, sf_dir),
+    )
+    recomputed = recomputed.select("doc_id", F.col("component").alias("rc"))
     return folded.join(recomputed, "doc_id").select(
         "doc_id",
         F.col("fc").alias("component"),

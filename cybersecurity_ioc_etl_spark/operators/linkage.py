@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import run_legs
 from ..sources.readers import load_table
 from .dedup import _SHINGLE_INT_SQL, _shingle_int
 from .registry import query
@@ -1873,15 +1874,9 @@ def q_incremental_linkage_maintenance(
     # The two blocked-pair censuses are independent barrier chains —
     # build them from a 2-thread pool (§2.6; this row is
     # scheduling-bound, see the r15 note below).
-    from concurrent.futures import ThreadPoolExecutor as _TPE0
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global
-    # conf; legs only run jobs on source scans.
-    with _TPE0(max_workers=2) as _pool0:
-        _fut_kp = _pool0.submit(_pairs, dirty, True)
-        _fut_p2 = _pool0.submit(_pairs, dirty2, False)
-        kp = _fut_kp.result()
-        p2 = _fut_p2.result()
+    kp, p2 = run_legs(
+        spark, lambda: _pairs(dirty, True), lambda: _pairs(dirty2, False)
+    )
     z = F.lit(0).cast("bigint")
     rates = kp.agg(
         F.coalesce(F.sum("is_match").cast("bigint"), z).alias("nm"),
@@ -1964,22 +1959,15 @@ def q_incremental_linkage_maintenance(
     # hints replacing the per-round broadcasts — measured WORSE at
     # sf0.1: 6.2-7.8 s and +8 jobs vs 5.1-7.2 s for the broadcast
     # rounds; the broadcast jobs are cheaper than the extra exchanges.)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global
-    # conf; legs only run jobs on already-checkpointed frames (kp, wts).
-    with _TPE(max_workers=2) as _pool:
-        fut_b = _pool.submit(
-            lambda: _bi_edges(_match(kp, materialize=False), 1)
-            .localCheckpoint(eager=True)
-        )
-        fut_n = _pool.submit(
-            lambda: _bi_edges(
-                _match(p2, materialize=False), 2
-            ).localCheckpoint(eager=True)
-        )
-        bedges = fut_b.result()
-        nedges = fut_n.result()
+    bedges, nedges = run_legs(
+        spark,
+        lambda: _bi_edges(_match(kp, materialize=False), 1).localCheckpoint(
+            eager=True
+        ),
+        lambda: _bi_edges(_match(p2, materialize=False), 2).localCheckpoint(
+            eager=True
+        ),
+    )
     # nmatch stays lazy: its two consumers (nedges above, nmatch_orig
     # in the fold leg) each recompute one broadcast-filter from the
     # checkpointed p2 — cheaper than a third materialization barrier.
@@ -2034,17 +2022,9 @@ def q_incremental_linkage_maintenance(
         rprobe = _cc_iterate(rlab, redges, 1)
         return rlab, rprobe, _canon(rlab).localCheckpoint(eager=True)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_fold = pool.submit(_fold_leg)
-        fut_re = pool.submit(_recompute_leg)
-        flab, fprobe, cf = fut_fold.result()
-        rlab, rprobe, cr = fut_re.result()
+    (flab, fprobe, cf), (rlab, rprobe, cr) = run_legs(
+        spark, _fold_leg, _recompute_leg
+    )
 
     def _changes(probe: DataFrame, final: DataFrame) -> DataFrame:
         return (

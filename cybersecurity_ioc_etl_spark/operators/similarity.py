@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import run_legs
 from ..sinks.bucketed import drop_table_and_location, write_bucketed
 from ..sources.readers import fan_out_small_frame, load_table
 from .registry import query
@@ -2218,25 +2219,15 @@ def build_ivfpq_index(
     # actions off the same checkpointed artifacts — overlap them from a
     # 2-thread driver pool (guide §2.6; distinct table names, so the
     # catalog operations do not contend)
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_seg = pool.submit(
-            _write_ivfpq_segment, spark, assign3, codes, f"{prefix}_idx"
-        )
+    run_legs(
+        spark,
+        lambda: _write_ivfpq_segment(spark, assign3, codes, f"{prefix}_idx"),
         # trained centroids: k·dims rows — tiny, plain table (the SAME
         # checkpointed frame the assignment pass used, trained once)
-        fut_cent = pool.submit(
-            lambda: cent3.write.mode("overwrite")
-            .format("parquet")
-            .saveAsTable(f"{prefix}_cent")
-        )
-        fut_seg.result()
-        fut_cent.result()
+        lambda: cent3.write.mode("overwrite")
+        .format("parquet")
+        .saveAsTable(f"{prefix}_cent"),
+    )
     return f"{prefix}_idx", f"{prefix}_cent"
 
 
@@ -2372,17 +2363,7 @@ def serve_ivfpq_stored(
             .collect()  # driver-ok: K·M LUT rows (codebook-bounded)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_route = pool.submit(_route_leg)
-        fut_lut = pool.submit(_lut_leg)
-        routed = fut_route.result()
-        lut_rows = fut_lut.result()
+    routed, lut_rows = run_legs(spark, _route_leg, _lut_leg)
     if not routed:  # empty corpus → empty index, nothing to route to
         return spark.createDataFrame(
             [], "vec_id bigint, cid bigint, adc_dist double"
@@ -2631,16 +2612,12 @@ def q_ivfpq_delete_compact_topk(
 
 
 def build_ivfpq_upsert_segments(
-    spark: SparkSession, sf_dir: str, leg_out: dict | None = None
+    spark: SparkSession, sf_dir: str
 ) -> tuple[list[str], str]:
     """Build the two-segment upsert layout (train on base, route+encode
     the delta against stored artifacts) and return
-    ([base_table, delta_table], centroid_table) for serving.  Pass
-    ``leg_out`` (a dict) to receive {"build_s", "upsert_s"} — the rare
-    train+write leg vs the per-batch upsert leg (bench.py leg-splits
-    the ivfpq_upsert_topk row with it)."""
+    ([base_table, delta_table], centroid_table) for serving."""
     import hashlib
-    import time as _time
 
     prefix = "ivfpqu_" + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     tables = (f"{prefix}_base", f"{prefix}_delta", f"{prefix}_cent")
@@ -2653,30 +2630,18 @@ def build_ivfpq_upsert_segments(
     # centroids — overlapped per guide §2.6, the build_ivfpq_index
     # shape; the upsert leg below reads the STORED centroid table, so
     # it starts only after both writes land)
-    from concurrent.futures import ThreadPoolExecutor
-
-    _t_build = _time.time()
     cent3 = _trained_centroids(base).localCheckpoint(eager=True)
     assign_b, _, _ = _lloyd_round(base, cent3)
     codes_b = _pq_codes_frame(spark, sf_dir, comp=base)
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_seg = pool.submit(
-            _write_ivfpq_segment, spark, assign_b, codes_b, f"{prefix}_base"
-        )
-        fut_cent = pool.submit(
-            lambda: cent3.write.mode("overwrite")
-            .format("parquet")
-            .saveAsTable(f"{prefix}_cent")
-        )
-        fut_seg.result()
-        fut_cent.result()
-    _t_upsert = _time.time()
-    if leg_out is not None:
-        leg_out["build_s"] = _t_upsert - _t_build
+    run_legs(
+        spark,
+        lambda: _write_ivfpq_segment(
+            spark, assign_b, codes_b, f"{prefix}_base"
+        ),
+        lambda: cent3.write.mode("overwrite")
+        .format("parquet")
+        .saveAsTable(f"{prefix}_cent"),
+    )
     # ---- upsert: route + encode the delta batch against STORED artifacts
     delta = comp_all.filter(F.col("vec_id") % 10 == 7)
     assign_d, _, _ = _lloyd_round(delta, spark.table(f"{prefix}_cent"))
@@ -2685,8 +2650,6 @@ def build_ivfpq_upsert_segments(
         spark, sf_dir, comp=delta.unionByName(seeds)
     ).filter(F.col("vec_id") % 10 == 7)
     _write_ivfpq_segment(spark, assign_d, codes_d, f"{prefix}_delta")
-    if leg_out is not None:
-        leg_out["upsert_s"] = _time.time() - _t_upsert
     return [f"{prefix}_base", f"{prefix}_delta"], f"{prefix}_cent"
 
 
@@ -4298,8 +4261,10 @@ def _vec_arrs(
     by dim index i — the array-fold d2 representation (the knn_shapley
     r14 discipline applied family-wide in r15: per-pair distances as
     one JVM zip_with+aggregate fold instead of a ×dims row blowup
-    through a dim-keyed join + groupBy exchange)."""
-    return comp.groupBy(F.col(id_col).alias("vid")).agg(
+    through a dim-keyed join + groupBy exchange).  Consumers pair
+    values by POSITION, so a vector whose dim indices have a gap (size
+    != max(i)+1) raises instead of silently mismatching dims."""
+    arrs = comp.groupBy(F.col(id_col).alias("vid")).agg(
         F.transform(
             F.array_sort(
                 F.collect_list(
@@ -4307,7 +4272,23 @@ def _vec_arrs(
                 )
             ),
             lambda s: s["v"],
-        ).alias("arr")
+        ).alias("arr"),
+        F.max("i").alias("max_i"),
+    )
+    return arrs.select(
+        "vid",
+        F.when(
+            F.size("arr") != F.col("max_i") + 1,
+            F.raise_error(
+                F.concat(
+                    F.lit("_vec_arrs: dim indices of vector "),
+                    F.col("vid").cast("string"),
+                    F.lit(" are not dense 0..n-1"),
+                )
+            ),
+        )
+        .otherwise(F.col("arr"))
+        .alias("arr"),
     )
 
 
@@ -4713,8 +4694,6 @@ def q_nn_graph_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain (LSH ring → NND edges → beam walk) overlaps it from two
     # driver threads (guide §2.6) — r15 moved ring/edges inside the
     # beam leg; they were ~2.7 s of serial barriers ahead of the pool.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _exact_leg() -> DataFrame:
         return (
             tarr.select(F.col("vid").alias("u"), F.col("arr").alias("ta"))
@@ -4740,15 +4719,7 @@ def q_nn_graph_serve_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _gs_beam(qids, seeds, qarr, tarr, edges, _GS_H, _GS_B)
 
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_beam = pool.submit(_beam_leg)
-        fut_exact = pool.submit(_exact_leg)
-        visited = fut_beam.result()
-        exact = fut_exact.result()
+    visited, exact = run_legs(spark, _beam_leg, _exact_leg)
     served = visited.withColumn("rn", F.row_number().over(w_beam))
     hits = (
         served.filter(F.col("rn") <= _GS_TOPK)
@@ -5102,19 +5073,13 @@ def q_nn_graph_serve_recall_table(
 
     def _beam_leg() -> DataFrame:
         # the IVF quantizer training needs only ccomp — overlap it with
-        # the ring/edges graph build on a nested 2-thread pool (§2.6;
+        # the ring/edges graph build on nested legs (§2.6;
         # both sub-legs were serial links of this leg's critical path)
-        from concurrent.futures import ThreadPoolExecutor as _TPE2
-
-        with _TPE2(max_workers=2) as _p2:
-            _fut_graph = _p2.submit(_graph_subleg)
-            _fut_cent = _p2.submit(
-                lambda: _trained_centroids(ccomp).localCheckpoint(
-                    eager=True
-                )
-            )
-            rk, edges, seeds = _fut_graph.result()
-            cent3 = _fut_cent.result()
+        (rk, edges, seeds), cent3 = run_legs(
+            spark,
+            _graph_subleg,
+            lambda: _trained_centroids(ccomp).localCheckpoint(eager=True),
+        )
         # IVF seeding lever: train the coarse quantizer on the SAME raw
         # fixture (the ivf_trained_topk recipe), route each query to its
         # cell, seed the beam from that cell's members
@@ -5157,17 +5122,7 @@ def q_nn_graph_serve_recall_table(
     # are independent job chains off the same checkpointed frames; run
     # them from two driver threads so the audit's tasks back-fill the
     # chain's barriers (optimization guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_exact = pool.submit(_exact_leg)
-        fut_beams = pool.submit(_beam_leg)
-        exactr = fut_exact.result()
-        visited_all = fut_beams.result()
+    exactr, visited_all = run_legs(spark, _exact_leg, _beam_leg)
     ebest = exactr.filter(F.col("rn") == 1).select(
         "qid", F.col("u").alias("eu")
     )

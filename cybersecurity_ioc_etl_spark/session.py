@@ -10,8 +10,15 @@ across engines (the DuckDB oracle also runs in UTC).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
 from pyspark.sql import SparkSession
+
+# Name prefix of run_legs pool threads; sinks.bucketed.scoped_conf
+# refuses to run on a thread that carries it.
+LEG_THREAD_PREFIX = "run_legs"
 
 
 def get_spark(app_name: str = "cybersecurity-ioc-etl-spark", master: str | None = None) -> SparkSession:
@@ -52,3 +59,37 @@ def get_spark(app_name: str = "cybersecurity-ioc-etl-spark", master: str | None 
 
     spark.dataSource.register(KVStoreDataSource)
     return spark
+
+
+def run_legs(spark: SparkSession, *legs: Callable[[], Any]) -> list:
+    """Run independent zero-argument Spark job chains ("legs") from
+    driver threads, one thread per leg, so one chain's tasks back-fill
+    the other chains' barrier gaps.  Returns the results in argument
+    order; a failing leg's exception is re-raised after every leg has
+    finished (the first failing leg in argument order wins).
+
+    Rule: no leg may change session conf.  The SQL conf belongs to the
+    session, not the thread, and Spark plans lazily, so a leg that sets
+    a conf and restores it (``scoped_conf`` / ``bucket_filter_pruning``)
+    changes it under its sibling legs' jobs, which then plan with or
+    without the override depending on timing (ADVICE r6: an override
+    set inside an operator leaked into later plans).  Scope a conf
+    around the whole ``run_legs`` call instead.  Both halves of the rule
+    are checked: ``scoped_conf`` raises on a leg thread, and the session
+    conf is compared (one JVM call each side) before and after the legs,
+    which catches a bare ``spark.conf.set``."""
+    jconf = spark._jsparkSession.sessionState().conf()
+    before = jconf.getAllConfs()
+    with ThreadPoolExecutor(
+        max_workers=len(legs), thread_name_prefix=LEG_THREAD_PREFIX
+    ) as pool:
+        futures = [pool.submit(leg) for leg in legs]
+        results = [f.result() for f in futures]
+    after = jconf.getAllConfs()
+    if not before.equals(after):
+        raise RuntimeError(
+            "a run_legs leg changed the session conf: "
+            f"before {before.toSet().diff(after.toSet()).toString()}, "
+            f"after {after.toSet().diff(before.toSet()).toString()}"
+        )
+    return results

@@ -23,9 +23,12 @@ Rules that make bucketing actually work (all encoded here):
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import LEG_THREAD_PREFIX
 
 
 @contextmanager
@@ -37,7 +40,13 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
     timings).  NOTE Spark plans lazily: the conf must still be in scope
     when the DataFrame EXECUTES, so callers either materialize inside
     the block (``localCheckpoint(eager=True)``) or keep the block open
-    across the action."""
+    across the action.  Refused on a ``session.run_legs`` thread: the
+    set-then-restore would race the sibling legs' plans."""
+    if threading.current_thread().name.startswith(LEG_THREAD_PREFIX):
+        raise RuntimeError(
+            f"scoped_conf({key!r}) inside a run_legs leg; scope it around "
+            "the run_legs call instead"
+        )
     try:
         prior = spark.conf.get(key)
     except Exception:

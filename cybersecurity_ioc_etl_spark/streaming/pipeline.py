@@ -12,6 +12,7 @@ new, then stop — with the checkpoint playing the role of the
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import time
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import ioc as K
+from ..session import run_legs
 
 # Micro-batch shuffle/state-store partition count, scoped per stream run
 # (sinks.bucketed.scoped_conf): stateful streams pin their state-store
@@ -253,7 +255,6 @@ def run_dedup_evicting_stream(
     n_batches: int = 4,
     user_bound: int = 50,
     progress_out: list | None = None,
-    leg_out: dict | None = None,
 ) -> DataFrame:
     """Streaming dedup with REAL state eviction — the state-bounded
     production config of ``run_dedup_stream`` (whose 3650-day delay
@@ -279,17 +280,12 @@ def run_dedup_evicting_stream(
 
     Pass ``progress_out`` (a list) to capture each micro-batch's
     eventTime stats — the empirical-pinning hook the stream-join
-    queries use.  Pass ``leg_out`` (a dict) to receive
-    {"staging_s", "drain_s"} — the fixture-staging wall (batch
-    splitting + file writes, pure test scaffolding) vs the actual
-    stream drain (bench.py leg-splits the stream_dedup_evicting row
-    with it)."""
+    queries use."""
     import os
     import shutil
 
     from ..sources.readers import load_table
 
-    _t_stage = time.time()
     ev = (
         load_table(spark, sf_dir, "events")
         .filter((F.col("user_id") < user_bound) & F.col("ts").isNotNull())
@@ -330,17 +326,9 @@ def run_dedup_evicting_stream(
         shutil.rmtree(tmp)
         os.utime(target, (t0 + 60 * k, t0 + 60 * k))
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=min(4, n_batches)) as pool:
-        list(pool.map(_stage_one, range(n_batches)))
-    _t_drain = time.time()
-    if leg_out is not None:
-        leg_out["staging_s"] = _t_drain - _t_stage
+    run_legs(
+        spark, *(functools.partial(_stage_one, k) for k in range(n_batches))
+    )
     schema = staged.drop("b").schema
     stream = (
         spark.readStream.schema(schema)
@@ -360,8 +348,6 @@ def run_dedup_evicting_stream(
         .trigger(availableNow=True)
     )
     q = _start_drained(spark, q)
-    if leg_out is not None:
-        leg_out["drain_s"] = time.time() - _t_drain
     if progress_out is not None:
         progress_out.extend(
             {
@@ -1778,14 +1764,7 @@ def run_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         shutil.rmtree(tmp)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    # INVARIANT (ADVICE-r14): no pooled leg may touch session-global conf
-    # (scoped_conf / bucket_filter_pruning) -- a scoped restore inside one
-    # leg would race the sibling leg's lazy plans (the ADVICE-r6 leak
-    # class).  Legs here only run jobs on already-checkpointed frames.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        list(pool.map(_stage_one, range(4)))
+    run_legs(spark, *(functools.partial(_stage_one, k) for k in range(4)))
 
     def fold(batch: DataFrame, bid: int) -> None:
         if batch.isEmpty():

@@ -49,6 +49,12 @@ _REPRESENTATIVES = [
     "ann_recall_audit",  # two top-k plans + intersection
     "event_value_percentiles",  # rank-based order statistics
     "embedding_power_iteration",  # spectral iteration, signed floors
+    # rewritten as collected folds or overlapped from run_legs
+    "trade_louvain_two_level",  # collected Louvain fold
+    "nn_graph_serve_recall_table",  # cfg-tagged beam chain, nested legs
+    "embedding_dbscan_clusters",  # collected core-graph fold
+    "incremental_cc_maintenance",  # fold leg vs audit leg
+    "incremental_linkage_maintenance",  # three overlapped leg pairs
 ]
 
 

@@ -1769,6 +1769,24 @@ def test_recall_table_refuses_mixed_hop_counts(spark, sf_dir, monkeypatch):
         QUERIES["nn_graph_serve_recall_table"](spark, sf_dir)
 
 
+def test_vec_arrs_refuses_gapped_dims(spark):
+    """The array-fold distances pair values by position; a vector whose
+    dim indices skip one must fail loudly, not shift every later dim."""
+    import pytest
+    from pyspark.errors import PySparkException
+
+    from cybersecurity_ioc_etl_spark.operators.similarity import _vec_arrs
+
+    comp = spark.createDataFrame(
+        [(1, 0, 5), (1, 1, 6), (1, 2, 7), (2, 0, 5), (2, 2, 7)],
+        "vec_id bigint, i int, xi bigint",
+    )
+    dense = _vec_arrs(comp.filter("vec_id = 1")).collect()
+    assert [(r.vid, list(r.arr)) for r in dense] == [(1, [5, 6, 7])]
+    with pytest.raises(PySparkException, match="not dense"):
+        _vec_arrs(comp).collect()
+
+
 def test_rq_codebooks_broadcast_and_errors_monotone(spark, sf_dir):
     """Residual quantization: both codebook sides must BROADCAST into
     the dot passes (codebooks are K·dims rows, never shuffled
