@@ -389,29 +389,18 @@ def q_stream_stateful_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame
     stateful stream must converge to it regardless of how the input
     splits into micro-batches (the exactly-once counter claim; replaces
     h-isac.py:171-176's read-modify-write metrics file)."""
-    import tempfile
-
+    from ..streaming.drain import drain_to_memory, replay
     from ..streaming.pipeline import parse_tweets, tweets_to_ioc_rows
-    from ..streaming.stateful import running_ioc_type_totals
+    from ..streaming.stateful import ioc_type_totals
 
-    src = tempfile.mkdtemp(prefix="st_tweets_")
-    ckpt = tempfile.mkdtemp(prefix="st_ckpt_")
-    out = tempfile.mkdtemp(prefix="st_out_")
     # 4 files -> 4 micro-batches: enough to prove multi-batch state,
     # without 32 batch-commit round-trips in the correctness gate
-    synthetic_tweet_json(spark, sf_dir).coalesce(4).write.mode("overwrite").text(src)
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1")  # force multiple micro-batches
-        .load(src)
-    )
-    rows = tweets_to_ioc_rows(parse_tweets(raw))
-    running_ioc_type_totals(rows, ckpt, out)
-    return (
-        spark.read.parquet(out)
-        .groupBy("type")
-        .agg(F.max("total").alias("total"))  # totals are monotone; max = final
-    )
+    with replay(spark, synthetic_tweet_json(spark, sf_dir).coalesce(4)) as raw:
+        totals = drain_to_memory(
+            spark, ioc_type_totals(tweets_to_ioc_rows(parse_tweets(raw))), "append"
+        )
+    # totals are monotone; max = final
+    return totals.groupBy("type").agg(F.max("total").alias("total"))
 
 
 @query(

@@ -907,9 +907,7 @@ def q_stream_ks_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     census = (
-        _run_stream_count_fold(
-            spark, e, ["event_type", "vi", "in_a"], "stream_ksemd_"
-        )
+        _run_stream_count_fold(spark, e, ["event_type", "vi", "in_a"])
         .groupBy("event_type", "vi")
         .agg(
             F.sum(F.when(F.col("in_a"), F.col("c")).otherwise(0))
@@ -2003,9 +2001,7 @@ def q_stream_bh_fdr_battery(
             .alias("vi"),
         )
     )
-    census = _run_stream_count_fold(
-        spark, e, ["event_type", "dow", "vi"], "stream_bh_"
-    )
+    census = _run_stream_count_fold(spark, e, ["event_type", "dow", "vi"])
     cells = (
         census.groupBy("event_type", "dow")
         .agg(
@@ -2239,9 +2235,7 @@ def q_stream_cmh_weekend_purchase(
             .alias("pur"),
         )
     )
-    census = _run_stream_count_fold(
-        spark, e, ["hq", "wkd", "pur"], "stream_cmh_"
-    )
+    census = _run_stream_count_fold(spark, e, ["hq", "wkd", "pur"])
     z = F.lit(0).cast("bigint")
 
     def cell(w: int, p: int):
@@ -2705,7 +2699,7 @@ def q_stream_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cells = (
-        _run_stream_count_fold(spark, e, ["vi", "g"], "stream_jt_")
+        _run_stream_count_fold(spark, e, ["vi", "g"])
         .select("vi", "g", F.col("c").cast("bigint").alias("c"))
         .localCheckpoint(eager=True)
     )

@@ -8,50 +8,40 @@ explode → sink.  ``Trigger.AvailableNow`` replaces the reference's
 resume-from-last_run batch loop (h-isac.py:149-153): process everything
 new, then stop — with the checkpoint playing the role of the
 ~/pyioc_hisac_meta.json state file, minus its AM/PM bug (SURVEY §4.3.2).
+
+Drain contract.  Every runner here starts its query through
+``streaming.drain`` and nowhere else, which fixes three things once:
+
+- conf scope: the query starts under ``spark.sql.shuffle.partitions =
+  drain._STREAM_SHUFFLE_PARTS``, the value its state store and its
+  checkpoint keep on every resume;
+- replay-safe output: foreachBatch results go through ``drain_partials``
+  as bid-keyed overwrites folded from ``_SUCCESS``-committed dirs, never
+  blind appends, so an at-least-once re-fire cannot double-count;
+- release: the staged source and the checkpoint the drain module made
+  are removed when the run ends, and a memory-sink view is dropped as
+  soon as ``drain_to_memory`` has captured its frame.  A partials dir
+  stays, because the returned frame reads it lazily; caller-owned dirs
+  (``work_dir``, ``checkpoint_dir``, ``out_dir``) are never touched.
 """
 
 from __future__ import annotations
 
-import functools
 import os
-import tempfile
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import ioc as K
-from ..session import run_legs
-
-# Micro-batch shuffle/state-store partition count, scoped per stream run
-# (sinks.bucketed.scoped_conf): stateful streams pin their state-store
-# partition count from spark.sql.shuffle.partitions at FIRST query
-# start, so the batch engine's core-count default (32 here) would give
-# every micro-batch 32 state commits + 32 reduce tasks for
-# trigger-sized inputs — per-batch volume, not cluster width, is the
-# right sizing (optimization guide §2.2: fewer, larger partitions).
-# Production deployments raise this via the env to match real trigger
-# volume; checkpoints replay under the same scoped value, so resume
-# tests see a consistent layout.
-_STREAM_SHUFFLE_PARTS = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-
-
-def _start_drained(spark: SparkSession, writer) -> "object":
-    """Start ``writer`` under the stream-scoped shuffle-partition conf
-    and drain it to completion (every stream here triggers
-    availableNow, so the run is synchronous).  The conf must be in
-    scope at ``.start()`` — Structured Streaming clones the session
-    conf when the query starts, not per batch."""
-    from ..sinks.bucketed import scoped_conf
-
-    with scoped_conf(
-        spark, "spark.sql.shuffle.partitions", _STREAM_SHUFFLE_PARTS
-    ):
-        q = writer.start()
-        q.awaitTermination()
-    return q
+from .drain import (
+    _write_partial_bid,
+    drain,
+    drain_partials,
+    drain_to_files,
+    drain_to_memory,
+    replay,
+)
 
 # tweet envelope schema (firehose.py:20-37) — explicit StructType replacing
 # json.loads duck-typing; PERMISSIVE parsing puts malformed payloads in
@@ -149,55 +139,33 @@ def run_hourly_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output matches the batch/DuckDB form of the same aggregation —
     streaming/batch parity is the correctness claim here.
     """
-    import os
-
     from ..sources.readers import normalize_event_ts
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # the file stream source lists a *directory*; expose the single fixture
-    # file through a symlinked dir (zero-copy)
-    src_dir = tempfile.mkdtemp(prefix="stream_events_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    vi = F.round(F.col("value") * F.lit(10000.0)).cast("bigint")
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.sum(vi.cast("decimal(38,0)")).cast("double") / 1e4).alias("total_value"),
+    path = f"{sf_dir}/events.parquet"
+    with replay(spark, path, spark.read.parquet(path).schema) as raw:
+        stream = normalize_event_ts(raw)
+        vi = F.round(F.col("value") * F.lit(10000.0)).cast("bigint")
+        agg = (
+            stream.groupBy(F.window("ts", "1 hour"), F.col("event_type"))
+            .agg(
+                F.count("*").alias("n_events"),
+                (F.sum(vi.cast("decimal(38,0)")).cast("double") / 1e4).alias(
+                    "total_value"
+                ),
+            )
+            .select(
+                F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
+                    "hour_start"
+                ),
+                "event_type",
+                "n_events",
+                "total_value",
+            )
         )
-        .select(
-            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "hour_start"
-            ),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
-    name = f"hourly_counts_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_hourly_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    return spark.table(name)
+        return drain_to_memory(spark, agg, "complete")
 
 
-def run_dedup_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    keys: tuple[str, ...] = ("user_id", "event_type"),
-    n_files: int = 4,
-) -> DataFrame:
+def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact deduplication: file source split into micro-batches
     → ``dropDuplicatesWithinWatermark`` → append-mode memory sink.  The
     first row per key is emitted; subsequent duplicates — including ones
@@ -212,40 +180,24 @@ def run_dedup_stream(
     watermark horizon instead of growing with the stream, which is the
     entire point of the WithinWatermark variant over plain
     ``dropDuplicates``."""
-    import os
-
     from ..sources.readers import normalize_event_ts
 
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # split the fixture into n_files so the stream runs multiple
+    # split the fixture into 4 files so the stream runs multiple
     # micro-batches and duplicates actually cross batch boundaries
-    src_dir = tempfile.mkdtemp(prefix="stream_dedup_src_")
-    batch.repartition(n_files).write.mode("overwrite").parquet(src_dir)
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    # event-time watermarks require TIMESTAMP (with zone); the fixture's
-    # NANOS column lands as NTZ — session tz is pinned UTC so the cast
-    # is instant-preserving
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    deduped = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
-        list(keys)
-    )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dedup_")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    out = spark.table(name)
-    # pin the drained rows before the tmp source dir can go away
-    return out.localCheckpoint(eager=True)
+    with replay(spark, batch.repartition(4)) as raw:
+        # event-time watermarks require TIMESTAMP (with zone); the fixture's
+        # NANOS column lands as NTZ — session tz is pinned UTC so the cast
+        # is instant-preserving
+        stream = normalize_event_ts(raw).withColumn(
+            "ts", F.col("ts").cast("timestamp")
+        )
+        deduped = stream.withWatermark(
+            "ts", "3650 days"
+        ).dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        return drain_to_memory(spark, deduped, "append").localCheckpoint(
+            eager=True
+        )
 
 
 def run_dedup_evicting_stream(
@@ -253,8 +205,6 @@ def run_dedup_evicting_stream(
     sf_dir: str,
     delay: str = "6 hours",
     n_batches: int = 4,
-    user_bound: int = 50,
-    progress_out: list | None = None,
 ) -> DataFrame:
     """Streaming dedup with REAL state eviction — the state-bounded
     production config of ``run_dedup_stream`` (whose 3650-day delay
@@ -265,7 +215,7 @@ def run_dedup_evicting_stream(
     eviction epoch, which is the semantics a crawler dedup actually
     runs (dedup against the recent horizon, not all history).
 
-    Determinism staging: the fixture's events (user_id < user_bound)
+    Determinism staging: the fixture's events (user_id < 50)
     are split into ``n_batches`` files by EVENT-TIME RANGE — batch b =
     (n·(eus−mn)) div (mx−mn+1) over epoch-microseconds — reduced to
     the FIRST row per (user, batch) (min ts, then min event_id), and
@@ -276,19 +226,12 @@ def run_dedup_evicting_stream(
     the emitted row and the state expiry it sets are unique — no
     intra-batch arrival-order nondeterminism; (3) the watermark after
     batch k is max staged ts of batch k (ms-floored) − delay, a closed
-    form both engines state.
-
-    Pass ``progress_out`` (a list) to capture each micro-batch's
-    eventTime stats — the empirical-pinning hook the stream-join
-    queries use."""
-    import os
-    import shutil
-
+    form both engines state."""
     from ..sources.readers import load_table
 
     ev = (
         load_table(spark, sf_dir, "events")
-        .filter((F.col("user_id") < user_bound) & F.col("ts").isNotNull())
+        .filter((F.col("user_id") < 50) & F.col("ts").isNotNull())
         .select("user_id", "ts", "event_id")
     )
     bounds = ev.agg(
@@ -308,63 +251,16 @@ def run_dedup_evicting_stream(
         .select("user_id", "b", "first.ts", "first.event_id")
         .localCheckpoint(eager=True)
     )
-    src_dir = tempfile.mkdtemp(prefix="stream_dedup_evict_")
-    t0 = time.time() - 3600
-
-    # the n_batches single-file staging writes are independent jobs off
-    # the checkpointed staged frame — run them from a driver thread
-    # pool (guide §2.6) instead of sequentially; names and mtimes are
-    # computed per k, so the staged layout is byte-identical
-    def _stage_one(k: int) -> None:
-        tmp = os.path.join(src_dir, f"_tmp{k}")
-        staged.filter(F.col("b") == k).drop("b").coalesce(1).write.parquet(
-            tmp
+    with replay(spark, staged, buckets=n_batches) as stream:
+        deduped = stream.withWatermark(
+            "ts", delay
+        ).dropDuplicatesWithinWatermark(["user_id"])
+        return drain_to_memory(spark, deduped, "append").localCheckpoint(
+            eager=True
         )
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-        target = os.path.join(src_dir, f"{k:02d}.parquet")
-        shutil.move(os.path.join(tmp, part[0]), target)
-        shutil.rmtree(tmp)
-        os.utime(target, (t0 + 60 * k, t0 + 60 * k))
-
-    run_legs(
-        spark, *(functools.partial(_stage_one, k) for k in range(n_batches))
-    )
-    schema = staged.drop("b").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    deduped = stream.withWatermark("ts", delay).dropDuplicatesWithinWatermark(
-        ["user_id"]
-    )
-    name = f"stream_dedup_evict_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dedup_evict_")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    if progress_out is not None:
-        progress_out.extend(
-            {
-                "batchId": p.batchId,
-                "eventTime": dict(p.eventTime),
-                "numRows": p.stateOperators[0].numRowsTotal
-                if p.stateOperators
-                else None,
-            }
-            for p in q.recentProgress
-        )
-    return spark.table(name).localCheckpoint(eager=True)
 
 
-def run_neardup_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, max_doc: int = 500
-) -> DataFrame:
+def run_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CONTENT near-dup: the documents fixture split into
     micro-batches → per-row MinHash signature (k=4, a pure projection —
     see operators.dedup.minhash_row for why the signature must not be a
@@ -384,50 +280,36 @@ def run_neardup_stream(
     from ..operators.dedup import minhash_row
 
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") < max_doc
+        F.col("doc_id") < 500
     )
-    src_dir = tempfile.mkdtemp(prefix="stream_neardup_src_")
-    batch.repartition(n_files).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    # synthetic deterministic event time (documents carry none): the
-    # watermark column only drives state eviction, which the huge delay
-    # disables for the bounded fixture.  Offset well past the epoch —
-    # the initial watermark is epoch 0 and a doc_id=0 row AT the
-    # watermark would be dropped as late before ever reaching state.
-    sig = stream.select(
-        "doc_id",
-        F.timestamp_seconds(F.col("doc_id") + F.lit(1_000_000_000)).alias("ts"),
-        *minhash_row(F.col("text"), k=4),
-    )
-    deduped = sig.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
-        ["mh_0", "mh_1", "mh_2", "mh_3"]
-    )
-    name = f"stream_neardup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_neardup_")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    return spark.table(name).localCheckpoint(eager=True)
+    with replay(spark, batch.repartition(4)) as stream:
+        # synthetic deterministic event time (documents carry none): the
+        # watermark column only drives state eviction, which the huge delay
+        # disables for the bounded fixture.  Offset well past the epoch —
+        # the initial watermark is epoch 0 and a doc_id=0 row AT the
+        # watermark would be dropped as late before ever reaching state.
+        sig = stream.select(
+            "doc_id",
+            F.timestamp_seconds(F.col("doc_id") + F.lit(1_000_000_000)).alias(
+                "ts"
+            ),
+            *minhash_row(F.col("text"), k=4),
+        )
+        deduped = sig.withWatermark(
+            "ts", "3650 days"
+        ).dropDuplicatesWithinWatermark(["mh_0", "mh_1", "mh_2", "mh_3"])
+        return drain_to_memory(spark, deduped, "append").localCheckpoint(
+            eager=True
+        )
 
 
-def run_stream_ann(
-    spark: SparkSession, sf_dir: str, n_queries: int = 4, k: int = 10
-) -> DataFrame:
+def run_stream_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN serving: QUERY vectors arrive as a stream and are
     answered against a STATIC corpus index — the online complement of
     the batch ``ann_bucketed_topk`` build.  Each micro-batch runs the
     full bucketed top-k plan through ``foreachBatch`` (per-query results
     are independent, so batch-at-a-time answering is exact, not an
-    approximation of the batch result), appending to a parquet sink.
+    approximation of the batch result), written as replay-safe partials.
 
     Scale shape: ``foreachBatch`` exposes the whole batch DataFrame API,
     so the per-batch plan is IDENTICAL to the batch one — corpus touched
@@ -437,48 +319,27 @@ def run_stream_ann(
     prunes to matching buckets instead of re-bucketing; state is zero —
     queries are stateless lookups, all the index state lives in
     storage."""
-    import os
-
     from ..operators.similarity import ann_bucketed_topk_frame
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    corpus = e.filter(F.col("vec_id") >= n_queries).localCheckpoint(eager=True)
-    qsrc = tempfile.mkdtemp(prefix="stream_ann_q_")
-    # two micro-batches of queries (2 files x maxFilesPerTrigger=1)
-    e.filter(F.col("vec_id") < n_queries).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(qsrc)
-    out_dir = tempfile.mkdtemp(prefix="stream_ann_out_")
+    corpus = e.filter(F.col("vec_id") >= 4).localCheckpoint(eager=True)
 
-    def answer(batch: DataFrame, _bid: int) -> None:
+    def answer(batch: DataFrame, _bid: int) -> DataFrame | None:
         if batch.isEmpty():
-            return
-        frame = corpus.unionByName(batch)
-        ann_bucketed_topk_frame(frame, n_queries=n_queries, k=k).write.mode(
-            "append"
-        ).parquet(out_dir)
+            return None
+        return ann_bucketed_topk_frame(corpus.unionByName(batch))
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(qsrc)
+    # two micro-batches of the 4 query vectors
+    dirs = drain_partials(
+        spark, e.filter(F.col("vec_id") < 4).repartition(2), answer
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_ann_")
-    q = (
-        stream.writeStream.foreachBatch(answer)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    # an empty query stream writes nothing: read.parquet on a fileless
-    # dir throws UNABLE_TO_INFER_SCHEMA, so hand back the plan's schema
-    # with zero rows — the serving path's answer to a quiet trigger
-    if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
-        schema = ann_bucketed_topk_frame(e, n_queries=n_queries, k=k).schema
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(out_dir).localCheckpoint(eager=True)
+    # a quiet query stream writes nothing: hand back the plan's schema
+    # with zero rows — the serving path's answer to an empty trigger
+    if not dirs:
+        return spark.createDataFrame([], ann_bucketed_topk_frame(e).schema)
+    return spark.read.parquet(*dirs).localCheckpoint(eager=True)
 
 
 def run_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,32 +366,15 @@ def run_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = d.filter(hash_bucket(F.col("doc_id")) >= 80).select(
         "doc_id", "lang", "text"
     )
-    src = tempfile.mkdtemp(prefix="stream_classify_src_")
-    test.repartition(2).write.mode("overwrite").parquet(src)
-    out_dir = tempfile.mkdtemp(prefix="stream_classify_out_")
 
-    def score(batch: DataFrame, _bid: int) -> None:
-        if batch.isEmpty():
-            return
-        classify_docs(batch, grid).write.mode("append").parquet(out_dir)
+    def score(batch: DataFrame, _bid: int) -> DataFrame | None:
+        return None if batch.isEmpty() else classify_docs(batch, grid)
 
-    stream = (
-        spark.readStream.schema(test.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_classify_")
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
-        schema = classify_docs(test, grid).schema
-        pred = spark.createDataFrame([], schema)
+    dirs = drain_partials(spark, test.repartition(2), score)
+    if dirs:
+        pred = spark.read.parquet(*dirs)
     else:
-        pred = spark.read.parquet(out_dir)
+        pred = spark.createDataFrame([], classify_docs(test, grid).schema)
     return pred.groupBy("lang", "pred_lang").agg(F.count("*").alias("n_docs"))
 
 
@@ -539,7 +383,7 @@ def run_stream_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_value_outliers' docstring promises ('swap pass two for the
     live stream'): per-type moment stats are trained ONCE on the static
     history and broadcast into every micro-batch, each batch scores its
-    own events and appends a per-type partial census (outlier count,
+    own events and writes a per-type partial census (outlier count,
     event count, max z), and the drained partials merge associatively
     (sum/sum/max) — so the result hash-matches the batch oracle however
     the stream was batched.
@@ -556,34 +400,18 @@ def run_stream_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     stats = value_stats(e).localCheckpoint(eager=True)
-    src = tempfile.mkdtemp(prefix="stream_outliers_src_")
-    e.repartition(2).write.mode("overwrite").parquet(src)
-    out_dir = tempfile.mkdtemp(prefix="stream_outliers_out_")
 
-    def score(batch: DataFrame, _bid: int) -> None:
-        if batch.isEmpty():
-            return
-        score_value_outliers(batch, stats).write.mode("append").parquet(out_dir)
+    def score(batch: DataFrame, _bid: int) -> DataFrame | None:
+        return None if batch.isEmpty() else score_value_outliers(batch, stats)
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_outliers_")
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
+    dirs = drain_partials(spark, e.repartition(2), score)
+    if not dirs:
         return spark.createDataFrame(
             [],
             "event_type string, n_outliers bigint, n_events bigint,"
             " max_z double",
         )
-    parts = spark.read.parquet(out_dir)
+    parts = spark.read.parquet(*dirs)
     return parts.groupBy("event_type").agg(
         F.sum("n_outliers").cast("bigint").alias("n_outliers"),
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -598,11 +426,11 @@ def run_ioc_aging_stream(
     fail_at_bid: int | None = None,
 ) -> DataFrame:
     """Incremental MERGE of the indicator-aging table: IOC sightings
-    arrive as two micro-batches, and foreachBatch folds each batch's
-    partial aggregates into a persistent state table — the pattern a
-    lakehouse expresses as MERGE INTO, restated without a table format
-    (each merge writes a new state version; production swaps the
-    versioned dirs for a Delta/Iceberg commit).
+    arrive as two micro-batches, and foreachBatch writes each batch's
+    partial aggregates as one state shard; the serving view merges the
+    committed shards — the pattern a lakehouse expresses as MERGE INTO,
+    restated without a table format (production swaps the shard dirs for
+    a Delta/Iceberg commit).
 
     The state grain is the FINEST MERGEABLE one, (ioc, type, source):
     min/max/count merge associatively at that grain, while the served
@@ -612,92 +440,51 @@ def run_ioc_aging_stream(
     maintainable incrementally at 100 TB of feed history: each batch
     touches O(batch distinct keys), never the history.
 
-    REPLAY-SAFE: foreachBatch is at-least-once — after a crash between
-    the state write and the checkpoint commit, Spark re-fires the same
-    batch id with the same data.  State versions are therefore keyed BY
-    batch id on disk (``v{bid}``, committed iff Spark's ``_SUCCESS``
-    marker exists) and each merge reads the newest committed version
-    with a SMALLER bid — so replaying bid recomputes the identical
-    ``v{bid}`` instead of double-counting into the latest state.  Pass
-    ``work_dir`` to make src/state/checkpoint survive a restart (the
-    kill-resume test in tests/test_streaming.py), ``fail_at_bid`` to
-    inject a crash exactly in the vulnerable window (after the state
-    write, before the epoch commits)."""
+    REPLAY-SAFE: shards are ``drain_partials`` bid-keyed overwrites
+    (``state/v{bid}``, committed iff Spark's ``_SUCCESS`` marker
+    exists), so a re-fired bid recomputes its own shard instead of
+    double-counting.  Pass ``work_dir`` to make src/state/checkpoint
+    survive a restart (the kill-resume test in tests/test_streaming.py),
+    ``fail_at_bid`` to inject a crash exactly in the vulnerable window
+    (after the shard write, before the epoch commits)."""
     from ..operators.ioc_queries import ioc_table
 
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="stream_aging_")
-    src = os.path.join(work_dir, "src")
-    state_root = os.path.join(work_dir, "state")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(state_root, exist_ok=True)
-    if not os.path.isdir(src):  # first run populates; a resume reuses
-        rows = ioc_table(spark, sf_dir).select(
-            "ioc", "type", "source", "date_received"
-        )
-        rows.repartition(2).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    rows = ioc_table(spark, sf_dir).select(
+        "ioc", "type", "source", "date_received"
+    )
 
-    def _committed_versions() -> dict[int, str]:
-        out: dict[int, str] = {}
-        for name in os.listdir(state_root):
-            p = os.path.join(state_root, name)
-            if (
-                name.startswith("v")
-                and name[1:].isdigit()
-                and os.path.exists(os.path.join(p, "_SUCCESS"))
-            ):
-                out[int(name[1:])] = p
-        return out
-
-    def merge(batch: DataFrame, bid: int) -> None:
+    def shard(batch: DataFrame, bid: int) -> DataFrame | None:
         if batch.isEmpty():
-            return
+            return None
         part = batch.groupBy("ioc", "type", "source").agg(
             F.min("date_received").alias("first_seen"),
             F.max("date_received").alias("last_seen"),
             F.count("*").alias("n"),
         )
-        versions = _committed_versions()
-        prev = max((b for b in versions if b < bid), default=None)
-        if prev is not None:
-            cur = spark.read.parquet(versions[prev])
-            part = (
-                cur.unionByName(part)
-                .groupBy("ioc", "type", "source")
-                .agg(
-                    F.min("first_seen").alias("first_seen"),
-                    F.max("last_seen").alias("last_seen"),
-                    F.sum("n").alias("n"),
-                )
-            )
-        part.write.mode("overwrite").parquet(
-            os.path.join(state_root, f"v{bid}")
-        )
-        if fail_at_bid is not None and bid == fail_at_bid:
-            raise RuntimeError(
-                f"injected crash after state write of batch {bid}"
-            )
+        if bid != fail_at_bid:
+            return part
+        _write_partial_bid(part, os.path.join(work_dir, "state"), bid, "v")
+        raise RuntimeError(f"injected crash after state write of batch {bid}")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark, rows.repartition(2), shard, work_dir=work_dir,
+        parts="state", tag="v",
     )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    versions = _committed_versions()
-    if not versions:
+    if not dirs:
         return spark.createDataFrame(
             [],
             "ioc string, type string, first_seen string, last_seen string,"
             " n_sightings bigint, n_sources bigint",
         )
-    state = spark.read.parquet(versions[max(versions)])
+    state = (
+        spark.read.parquet(*dirs)
+        .groupBy("ioc", "type", "source")
+        .agg(
+            F.min("first_seen").alias("first_seen"),
+            F.max("last_seen").alias("last_seen"),
+            F.sum("n").alias("n"),
+        )
+    )
     # count the source COLUMN, not rows: the state keeps a NULL-source
     # group too (its sightings belong in n_sightings), but
     # COUNT(DISTINCT source) ignores NULLs — so must we
@@ -713,7 +500,7 @@ def run_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming mixture sampling: documents drain as two micro-batches,
     each filtered by the deterministic md5-bucket-vs-keep-rate decision
     (operators/sampling.py::mixture_keep_bp) in foreachBatch; survivors
-    append to parquet and the drained census per source must equal the
+    land as replay-safe partials and the drained census per source must equal the
     batch selection (the decision is a pure row function — batching
     cannot change it).
 
@@ -728,33 +515,19 @@ def run_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    src = tempfile.mkdtemp(prefix="stream_mixture_src_")
-    d.repartition(2).write.mode("overwrite").parquet(src)
-    out_dir = tempfile.mkdtemp(prefix="stream_mixture_out_")
 
-    def keep(batch: DataFrame, _bid: int) -> None:
+    def keep(batch: DataFrame, _bid: int) -> DataFrame | None:
         if batch.isEmpty():
-            return
-        batch.filter(
+            return None
+        return batch.filter(
             hash_bucket(F.col("doc_id"), 10000) < mixture_keep_bp()
-        ).write.mode("append").parquet(out_dir)
+        )
 
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_mixture_")
-    q = (
-        stream.writeStream.foreachBatch(keep)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    if not any(f.endswith(".parquet") for f in os.listdir(out_dir)):
-        kept = spark.createDataFrame([], d.schema)
+    dirs = drain_partials(spark, d.repartition(2), keep)
+    if dirs:
+        kept = spark.read.parquet(*dirs)
     else:
-        kept = spark.read.parquet(out_dir)
+        kept = spark.createDataFrame([], d.schema)
     return kept.groupBy("source").agg(
         F.count("*").alias("n_kept"),
         F.sum("n_chars").cast("bigint").alias("kept_chars"),
@@ -770,16 +543,8 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     refreshes per batch, needs no watermark, holds no state)."""
     from ..sources.readers import normalize_event_ts
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="stream_static_src_")
-    import os
-
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    path = f"{sf_dir}/events.parquet"
+    batch = spark.read.parquet(path)
     # static dimension: category per event_type (derived, but any
     # batch DataFrame — a parquet dim table, a JDBC read — slots in)
     dim = normalize_event_ts(batch).select("event_type").distinct().select(
@@ -789,22 +554,14 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("operational"))
         .alias("category"),
     )
-    agg = (
-        stream.join(F.broadcast(dim), "event_type")
-        .groupBy("category")
-        .agg(F.count("*").alias("n_events"))
-    )
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_static_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    return spark.table(name)
+    with replay(spark, path, batch.schema) as raw:
+        agg = (
+            normalize_event_ts(raw)
+            .join(F.broadcast(dim), "event_type")
+            .groupBy("category")
+            .agg(F.count("*").alias("n_events"))
+        )
+        return drain_to_memory(spark, agg, "complete")
 
 
 def run_partitioned_event_sink(
@@ -812,7 +569,6 @@ def run_partitioned_event_sink(
     sf_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    files_per_trigger: int = 2,
 ) -> DataFrame:
     """Streaming → date-partitioned table with DYNAMIC PARTITION
     OVERWRITE: each micro-batch rewrites exactly the partitions it
@@ -831,17 +587,6 @@ def run_partitioned_event_sink(
 
     batch = normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     daily = batch.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-    # source layout: exactly one file per day (hash-partition by day,
-    # then partitionBy writes each day dir from the one task owning it)
-    src_dir = tempfile.mkdtemp(prefix="stream_psink_src_")
-    daily.repartition(F.col("day")).write.mode("overwrite").partitionBy(
-        "day"
-    ).parquet(src_dir)
-    stream = (
-        spark.readStream.schema(daily.schema)
-        .option("maxFilesPerTrigger", str(files_per_trigger))
-        .parquet(src_dir)
-    )
 
     def write_day_partitions(bdf: DataFrame, epoch_id: int) -> None:
         (
@@ -851,12 +596,13 @@ def run_partitioned_event_sink(
             .parquet(out_dir)
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_day_partitions)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
+    # source layout: every day in exactly one file (hash-partitioned by
+    # day, one file per partition)
+    with replay(spark, daily.repartition(F.col("day"))) as stream:
+        drain(
+            spark, stream.writeStream.foreachBatch(write_day_partitions),
+            checkpoint_dir,
+        )
     return spark.read.parquet(out_dir)
 
 
@@ -864,39 +610,22 @@ def run_ioc_stream(
     spark: SparkSession,
     json_dir: str,
     checkpoint_dir: str,
-    out_dir: str | None = None,
+    out_dir: str,
 ) -> DataFrame:
     """End-to-end streaming IOC pipeline over a directory of tweet-JSON
     files (the test harness feeds micro-batches by dropping files):
-    readStream(text) → parse → extract → explode → append-mode sink.
-
-    With ``out_dir`` the sink is parquet — the recoverable kind: a second
-    run against the same checkpoint processes ONLY files that arrived
-    since (exactly-once resume, replacing h-isac.py:149-153's last_run
-    stamp).  Without it, a throwaway memory sink (no recovery support).
+    readStream(text) → parse → extract → explode → append-mode parquet
+    sink in ``out_dir`` — the recoverable kind: a second run against the
+    same checkpoint processes ONLY files that arrived since (exactly-once
+    resume, replacing h-isac.py:149-153's last_run stamp).  All three
+    dirs are the caller's; the run creates and removes nothing.
     """
     raw = spark.readStream.format("text").load(json_dir)
-    rows = tweets_to_ioc_rows(parse_tweets(raw, "value"))
-    if out_dir is not None:
-        q = (
-            rows.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-        )
-        q = _start_drained(spark, q)
-        return spark.read.parquet(out_dir)
-    name = f"ioc_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        rows.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    drain_to_files(
+        spark, tweets_to_ioc_rows(parse_tweets(raw, "value")), out_dir,
+        checkpoint_dir,
     )
-    q = _start_drained(spark, q)
-    return spark.table(name)
+    return spark.read.parquet(out_dir)
 
 
 def run_click_error_join_stream(
@@ -927,18 +656,16 @@ def run_click_error_join_stream(
     append sink has; the batch oracle states the final-watermark cutoff
     explicitly).
     """
-    import os
-
     from ..sources.readers import normalize_event_ts
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="stream_ss_join_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    path = f"{sf_dir}/events.parquet"
+    with replay(spark, path, spark.read.parquet(path).schema) as raw:
+        return drain_to_memory(
+            spark, _click_error_join(normalize_event_ts(raw), how), "append"
+        )
+
+
+def _click_error_join(stream: DataFrame, how: str) -> DataFrame:
     clicks = (
         stream.filter((F.col("event_type") == "click") & (F.col("user_id") < 40))
         .select(
@@ -979,17 +706,7 @@ def run_click_error_join_stream(
                 F.unix_micros(F.col("e_ts")) - F.unix_micros(F.col("c_ts"))
             ).alias("lag_us"),
         )
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ss_join_")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    return spark.table(name)
+    return joined
 
 
 def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1005,40 +722,24 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink; the per-user rollup is an ordinary batch agg over the
     drained result.
     """
-    import os
-
     from ..sources.readers import normalize_event_ts
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="stream_sessions_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    path = f"{sf_dir}/events.parquet"
     # complete mode, no watermark: append mode would never emit
     # sessions still open at end-of-stream (their windows sit above the
     # final watermark), so the drained fixture would be missing its last
     # 30 minutes of sessions.  Production config is append + watermark
     # (bounded state, sessions emit as they close); the parity run needs
     # the full final answer, which complete mode re-emits per trigger.
-    per_session = (
-        stream.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count("*").alias("n"))
-    )
-    name = f"sessions_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sessions_")
-    q = (
-        per_session.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
+    with replay(spark, path, spark.read.parquet(path).schema) as raw:
+        per_session = (
+            normalize_event_ts(raw)
+            .groupBy("user_id", F.session_window("ts", "30 minutes"))
+            .agg(F.count("*").alias("n"))
+        )
+        sessions = drain_to_memory(spark, per_session, "complete")
     return (
-        spark.table(name)
+        sessions
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_sessions"),
@@ -1067,85 +768,24 @@ def run_session_window_stream_append(
     Scale shape: state is O(open sessions) per user partition; the
     emission is pure eviction.  user_id < 10 bounds the fixture run;
     production drops the predicate."""
-    import os
-
     from ..sources.readers import normalize_event_ts
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="stream_sessions_app_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    ).filter(F.col("user_id") < 10)
-    per_session = (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss")
-            .alias("session_start"),
-            F.col("n_events").cast("bigint").alias("n_events"),
-        )
-    )
-    name = f"sessions_app_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sessions_app_")
-    q = (
-        per_session.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    return spark.table(name)
-
-
-def _write_partial_bid(df: DataFrame, out_dir: str, bid: int) -> None:
-    """Write a micro-batch's partial output keyed BY batch id
-    (overwrite of ``b{bid}/``) — foreachBatch is at-least-once, so a
-    blind append double-counts a replayed batch; an overwrite of the
-    bid's own subdir makes the replay recompute the identical partial
-    instead (the run_ioc_aging_stream committed-version discipline
-    applied to append-only partial sinks).
-
-    Callers whose fold is exactly one partial write do NOT pre-check
-    ``batch.isEmpty()``: the check is its own Spark job per trigger
-    (~0.15 s of pure scheduling at fixture scale, measured r14), and
-    an empty batch just writes an empty committed partial that the
-    merge unions as zero rows — identical result, half the jobs.
-    Folds with side semantics beyond the write (sentinel rows,
-    crash injection, versioned merges) keep their guards."""
-    df.write.mode("overwrite").parquet(os.path.join(out_dir, f"b{bid}"))
-
-
-def _committed_partial_dirs(out_dir: str) -> list[str]:
-    """Bid subdirs whose write COMMITTED (Spark's ``_SUCCESS`` marker) —
-    a half-written partial from a crash mid-write is invisible to the
-    fold, and its replay overwrites it.
-
-    ADVICE-r14: an EMPTY batch commits a dir holding only ``_SUCCESS``
-    (empty-relation plans write zero part files), which
-    ``spark.read.parquet`` cannot infer a schema from — skip dirs with
-    no data file (they union as zero rows by definition), so an
-    all-empty run returns [] and the caller's typed-empty fallback
-    fires instead of UNABLE_TO_INFER_SCHEMA."""
-    out = []
-    for name in sorted(os.listdir(out_dir)):
-        p = os.path.join(out_dir, name)
-        if (
-            name.startswith("b")
-            and name[1:].isdigit()
-            and os.path.exists(os.path.join(p, "_SUCCESS"))
-            and any(
-                f.startswith("part-") and not f.endswith(".crc")
-                for f in os.listdir(p)
+    path = f"{sf_dir}/events.parquet"
+    with replay(spark, path, spark.read.parquet(path).schema) as raw:
+        per_session = (
+            normalize_event_ts(raw)
+            .filter(F.col("user_id") < 10)
+            .withWatermark("ts", "30 minutes")
+            .groupBy("user_id", F.session_window("ts", "30 minutes"))
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                "user_id",
+                F.date_format("session_window.start", "yyyy-MM-dd HH:mm:ss")
+                .alias("session_start"),
+                F.col("n_events").cast("bigint").alias("n_events"),
             )
-        ):
-            out.append(p)
-    return out
+        )
+        return drain_to_memory(spark, per_session, "append")
 
 
 def run_stream_countmin(
@@ -1174,38 +814,18 @@ def run_stream_countmin(
     from ..operators.text_queries import cm_token_partials
     from ..sources.readers import load_table
 
-    if work_dir is None:
-        work_dir = tempfile.mkdtemp(prefix="stream_cm_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    if not os.path.isdir(src):  # first run populates; a resume reuses
-        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        d.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def fold(batch: DataFrame, bid: int) -> None:
+    def fold(batch: DataFrame, bid: int) -> DataFrame | None:
         if batch.isEmpty():
-            return
-        _write_partial_bid(cm_token_partials(batch), out_dir, bid)
-        if fail_at_bid is not None and bid == fail_at_bid:
-            raise RuntimeError(
-                f"injected crash after partial write of batch {bid}"
-            )
+            return None
+        part = cm_token_partials(batch)
+        if bid != fail_at_bid:
+            return part
+        _write_partial_bid(part, os.path.join(work_dir, "partials"), bid)
+        raise RuntimeError(f"injected crash after partial write of batch {bid}")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
+    dirs = drain_partials(spark, d.repartition(4), fold, work_dir=work_dir)
     if not dirs:
         return spark.createDataFrame([], "i bigint, b bigint, c bigint")
     parts = spark.read.parquet(*dirs)
@@ -1231,11 +851,6 @@ def run_stream_cdc_retraction(
     from ..operators.relational import _IVM_CUT, _RETRACT_MOD, mi
     from ..sources.readers import load_table
 
-    work_dir = tempfile.mkdtemp(prefix="stream_cdc_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
     # NULL-date rows are excluded from the change stream entirely: the
     # audit recompute (relational.py q_stream_retractable_agg `full`)
     # and the oracle's WHERE both drop them via three-valued logic, so
@@ -1258,37 +873,17 @@ def run_stream_cdc_retraction(
     dels = o.filter(
         is_base & (F.col("o_orderkey") % 10 == _RETRACT_MOD)
     ).select("o_orderpriority", "pi", F.lit("D").alias("op"))
-    ins.unionByName(dels).repartition(4).write.mode("overwrite").parquet(
-        src
-    )
-    schema = spark.read.parquet(src).schema
 
-    def fold(batch: DataFrame, bid: int) -> None:
+    def fold(batch: DataFrame, _bid: int) -> DataFrame:
         sign = F.when(F.col("op") == "I", F.lit(1)).otherwise(F.lit(-1))
-        _write_partial_bid(
-            batch.groupBy("o_orderpriority").agg(
-                F.sum(sign).alias("n"),
-                F.sum(
-                    sign.cast("decimal(38,0)")
-                    * F.col("pi").cast("decimal(38,0)")
-                ).alias("s"),
-            ),
-            out_dir,
-            bid,
+        return batch.groupBy("o_orderpriority").agg(
+            F.sum(sign).alias("n"),
+            F.sum(
+                sign.cast("decimal(38,0)") * F.col("pi").cast("decimal(38,0)")
+            ).alias("s"),
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
+    dirs = drain_partials(spark, ins.unionByName(dels).repartition(4), fold)
     if not dirs:
         return spark.createDataFrame(
             [], "o_orderpriority string, dn bigint, ds decimal(38,0)"
@@ -1318,11 +913,6 @@ def run_stream_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell count; the drain fold touches (batches × cells) rows."""
     from ..sources.readers import load_table
 
-    work_dir = tempfile.mkdtemp(prefix="stream_dp_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
     e = load_table(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("event_type").isNotNull()
     )
@@ -1335,39 +925,9 @@ def run_stream_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.dayofweek("ts") - 1).cast("string").alias("key"),
         )
     )
-    rel.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(
-            batch.groupBy("release", "key").agg(
-                F.count("*").alias("c")
-            ),
-            out_dir,
-            bid,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
-    if not dirs:
-        return spark.createDataFrame(
-            [], "release string, key string, n_true bigint"
-        )
-    return (
-        spark.read.parquet(*dirs)
-        .groupBy("release", "key")
-        .agg(F.sum("c").cast("bigint").alias("n_true"))
-    )
+    return _run_stream_count_fold(
+        spark, rel, ["release", "key"]
+    ).withColumnRenamed("c", "n_true")
 
 
 def run_stream_conformal_scores(
@@ -1392,11 +952,6 @@ def run_stream_conformal_scores(
     table."""
     from ..operators.events_queries import _conformal_base
 
-    work_dir = tempfile.mkdtemp(prefix="stream_conf_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
     e, med = _conformal_base(spark, sf_dir)
     cal = (
         e.filter((F.col("b") >= 50) & (F.col("b") < 75))
@@ -1406,87 +961,29 @@ def run_stream_conformal_scores(
             F.abs(F.col("vi") - F.col("med_i")).alias("s"),
         )
     )
-    cal.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(
-            batch.groupBy("event_type", "s").agg(
-                F.count("*").alias("c")
-            ),
-            out_dir,
-            bid,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
-    if not dirs:
-        return spark.createDataFrame(
-            [], "event_type string, s bigint, c bigint"
-        )
-    return (
-        spark.read.parquet(*dirs)
-        .groupBy("event_type", "s")
-        .agg(F.sum("c").cast("bigint").alias("c"))
-    )
+    return _run_stream_count_fold(spark, cal, ["event_type", "s"])
 
 
 def _run_stream_count_fold(
-    spark: SparkSession,
-    staged: DataFrame,
-    keys: list[str],
-    prefix: str,
-    n_files: int = 4,
+    spark: SparkSession, staged: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """Shared additive-count streaming fold: stage `staged` to parquet,
-    replay it as a file stream (one file per trigger), fold each
+    """Shared additive-count streaming fold: replay `staged` as four
+    files, one per trigger (``drain_partials``), fold each
     micro-batch into a per-`keys` integer COUNT partial written
     bid-keyed and replay-safe, and return the end-of-stream merged
     (keys..., c) census.  Counts are additive integers, so the merged
     state is batch-identical under any batching, ordering, or
-    at-least-once replay — the pattern behind the conformal / BT / AUC
-    streaming twins.
+    at-least-once replay — the pattern behind the conformal / DP / BT /
+    AUC streaming twins.
 
     Scale shape: per trigger one map-side-combined count bounded by the
     batch's distinct key combinations; the end-of-stream fold touches
     (batches × distinct keys) partial rows, never the staged stream."""
-    work_dir = tempfile.mkdtemp(prefix=prefix)
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    staged.repartition(n_files).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(
-            batch.groupBy(*keys).agg(F.count("*").alias("c")),
-            out_dir,
-            bid,
-        )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark,
+        staged.repartition(4),
+        lambda batch, _bid: batch.groupBy(*keys).agg(F.count("*").alias("c")),
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
     if not dirs:
         fields = ", ".join(
             f"{k} {staged.schema[k].dataType.simpleString()}" for k in keys
@@ -1509,9 +1006,9 @@ def run_stream_bt_comparisons(
     from ..operators.events_queries import _bt_comparisons
 
     gm = _bt_comparisons(spark, sf_dir)
-    return _run_stream_count_fold(
-        spark, gm, ["wi", "lo"], "stream_bt_"
-    ).withColumnRenamed("c", "w")
+    return _run_stream_count_fold(spark, gm, ["wi", "lo"]).withColumnRenamed(
+        "c", "w"
+    )
 
 
 def run_stream_auc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1530,9 +1027,7 @@ def run_stream_auc_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("bigint").alias("vi"),
         )
     )
-    return _run_stream_count_fold(
-        spark, e, ["vi", "event_type"], "stream_auc_"
-    )
+    return _run_stream_count_fold(spark, e, ["vi", "event_type"])
 
 
 def run_stream_span_occurrences(
@@ -1554,11 +1049,6 @@ def run_stream_span_occurrences(
     from ..operators.dedup import _SPAN_INC_CUT, _span_occ, _span_tokens
     from ..sources.readers import load_table
 
-    work_dir = tempfile.mkdtemp(prefix="stream_span_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
     d = (
         load_table(spark, sf_dir, "documents")
         .filter(
@@ -1567,24 +1057,11 @@ def run_stream_span_occurrences(
         )
         .select("doc_id", "text")
     )
-    d.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(_span_occ(_span_tokens(batch)), out_dir, bid)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark,
+        d.repartition(4),
+        lambda batch, _bid: _span_occ(_span_tokens(batch)),
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
     if not dirs:
         return spark.createDataFrame([], "doc_id bigint, p int, h bigint")
     return spark.read.parquet(*dirs).select("doc_id", "p", "h")
@@ -1607,28 +1084,11 @@ def run_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    work_dir = tempfile.mkdtemp(prefix="stream_kmv_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    d.repartition(4).write.mode("overwrite").parquet(src)
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(kmv_bottom_k(kmv_token_hashes(batch)), out_dir, bid)
-
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark,
+        d.repartition(4),
+        lambda batch, _bid: kmv_bottom_k(kmv_token_hashes(batch)),
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
     if not dirs:
         return spark.createDataFrame(
             [],
@@ -1682,37 +1142,23 @@ def run_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id"
     )
-    src_dir = tempfile.mkdtemp(prefix="stream_scd2_")
-    purchases.repartition(4).write.mode("overwrite").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(purchases.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    p, v = stream.alias("p"), F.broadcast(versions).alias("v")
-    joined = p.join(
-        v,
-        (F.col("p.user_id") == F.col("v.user_id"))
-        & (F.col("v.vf") <= F.col("p.ts"))
-        & ((F.col("p.ts") < F.col("v.vt")) | F.col("v.vt").isNull()),
-    ).select(
-        F.col("p.event_id").alias("event_id"),
-        F.col("p.user_id").alias("user_id"),
-        F.date_format("p.ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-        F.col("v.event_type").alias("regime_type"),
-        F.date_format("v.vf", "yyyy-MM-dd HH:mm:ss").alias("regime_from"),
-    )
-    name = f"scd2_enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_scd2_")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    return spark.table(name).localCheckpoint(eager=True)
+    with replay(spark, purchases.repartition(4)) as stream:
+        p, v = stream.alias("p"), F.broadcast(versions).alias("v")
+        joined = p.join(
+            v,
+            (F.col("p.user_id") == F.col("v.user_id"))
+            & (F.col("v.vf") <= F.col("p.ts"))
+            & ((F.col("p.ts") < F.col("v.vt")) | F.col("v.vt").isNull()),
+        ).select(
+            F.col("p.event_id").alias("event_id"),
+            F.col("p.user_id").alias("user_id"),
+            F.date_format("p.ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+            F.col("v.event_type").alias("regime_type"),
+            F.date_format("v.vf", "yyyy-MM-dd HH:mm:ss").alias("regime_from"),
+        )
+        return drain_to_memory(spark, joined, "append").localCheckpoint(
+            eager=True
+        )
 
 
 def run_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1739,61 +1185,23 @@ def run_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    work_dir = tempfile.mkdtemp(prefix="stream_mg_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    os.makedirs(src, exist_ok=True)
     staged = d.withColumn(
         "b", _shingle_int(F.col("doc_id").cast("string")) % 4
     ).localCheckpoint(eager=True)
-    import shutil
 
-    # independent single-file staging writes — overlapped (guide §2.6),
-    # the run_dedup_evicting_stream staging shape
-    def _stage_one(k: int) -> None:
-        tmp = os.path.join(work_dir, f"_tmp{k}")
-        staged.filter(F.col("b") == k).drop("b").coalesce(1).write.parquet(
-            tmp
-        )
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-        shutil.move(
-            os.path.join(tmp, part[0]),
-            os.path.join(src, f"{k:02d}.parquet"),
-        )
-        shutil.rmtree(tmp)
-
-    run_legs(spark, *(functools.partial(_stage_one, k) for k in range(4)))
-
-    def fold(batch: DataFrame, bid: int) -> None:
+    def fold(batch: DataFrame, bid: int) -> DataFrame | None:
         if batch.isEmpty():
-            return
+            return None
         # sentinel=True (ADVICE r10): a degenerate batch whose top m+1
         # token counts all tie yields an EMPTY counter set (no f > d);
         # without the sentinel row that batch's truncation offset d
         # would vanish from d_sum while the oracle's dd CTE still
         # counts every shard — err_bound and the hash would diverge.
-        _write_partial_bid(
-            mg_partial(mg_tokens(batch), sentinel=True).withColumn(
-                "bid", F.lit(bid)
-            ),
-            out_dir,
-            bid,
+        return mg_partial(mg_tokens(batch), sentinel=True).withColumn(
+            "bid", F.lit(bid)
         )
 
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
+    dirs = drain_partials(spark, staged, fold, buckets=4)
     if not dirs:
         return spark.createDataFrame(
             [],
@@ -1868,28 +1276,9 @@ def run_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    work_dir = tempfile.mkdtemp(prefix="stream_hll_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    d.repartition(4).write.mode("overwrite").parquet(src)
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(hll_batch_registers(batch), out_dir, bid)
-
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark, d.repartition(4), lambda batch, _bid: hll_batch_registers(batch)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
     if not dirs:
         return spark.createDataFrame(
             [],
@@ -1926,13 +1315,10 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
         .select("event_id", "ts", "event_type", "value")
     )
-    src = tempfile.mkdtemp(prefix="stream_ohlc_src_")
-    e.repartition(3).write.mode("overwrite").parquet(src)
-    out_dir = tempfile.mkdtemp(prefix="stream_ohlc_out_")
 
-    def partial_bars(batch: DataFrame, bid: int) -> None:
+    def partial_bars(batch: DataFrame, _bid: int) -> DataFrame | None:
         if batch.isEmpty():
-            return
+            return None
         vi = F.round(F.col("value") * F.lit(10000.0)).cast("bigint")
         ev = batch.select(
             F.date_format(
@@ -1951,7 +1337,7 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("cnt"),
             F.sum("vi").alias("sm"),
         )
-        flat = part.select(
+        return part.select(
             "hour_start",
             "event_type",
             F.col("first.ts").alias("f_ts"),
@@ -1965,21 +1351,8 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
             "sm",
         )
-        _write_partial_bid(flat, out_dir, bid)
 
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_stream_ohlc_")
-    q = (
-        stream.writeStream.foreachBatch(partial_bars)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
+    dirs = drain_partials(spark, e.repartition(3), partial_bars)
     if not dirs:
         return spark.createDataFrame(
             [],
@@ -2019,28 +1392,9 @@ def run_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pruning import bloom_audit_row, bloom_bits, bloom_dim
 
     dim = bloom_dim(spark, sf_dir)
-    work_dir = tempfile.mkdtemp(prefix="stream_bloom_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    dim.repartition(4).write.mode("overwrite").parquet(src)
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(bloom_bits(batch), out_dir, bid)
-
-    stream = (
-        spark.readStream.schema(dim.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark, dim.repartition(4), lambda batch, _bid: bloom_bits(batch)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
     if dirs:
         bits = spark.read.parquet(*dirs).distinct()
     else:
@@ -2060,30 +1414,9 @@ def run_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    work_dir = tempfile.mkdtemp(prefix="stream_drift_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
-    e.repartition(4).write.mode("overwrite").parquet(src)
-
-    def fold(batch: DataFrame, bid: int) -> None:
-        _write_partial_bid(drift_partial_sums(batch), out_dir, bid)
-
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet(src).schema
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    dirs = drain_partials(
+        spark, e.repartition(4), lambda batch, _bid: drift_partial_sums(batch)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
     if not dirs:
         return spark.createDataFrame(
             [],
@@ -2115,11 +1448,6 @@ def run_stream_topk_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.events_queries import _TS_K
     from ..sources.readers import load_table
 
-    work_dir = tempfile.mkdtemp(prefix="stream_topk_")
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "partials")
-    ckpt = os.path.join(work_dir, "ckpt")
-    os.makedirs(out_dir, exist_ok=True)
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
@@ -2130,35 +1458,20 @@ def run_stream_topk_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 10000).cast("bigint").alias("vi"),
         )
     )
-    e.repartition(4).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
 
-    def fold(batch: DataFrame, bid: int) -> None:
+    def fold(batch: DataFrame, _bid: int) -> DataFrame:
         from pyspark.sql import Window as W
 
         w = W.partitionBy("event_type").orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
-        _write_partial_bid(
+        return (
             batch.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= _TS_K)
-            .select("event_type", "vi", "ts", "event_id"),
-            out_dir,
-            bid,
+            .select("event_type", "vi", "ts", "event_id")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-    )
-    q = _start_drained(spark, q)
-    dirs = _committed_partial_dirs(out_dir)
+    dirs = drain_partials(spark, e.repartition(4), fold)
     if not dirs:
         return spark.createDataFrame(
             [], "event_type string, vi bigint, ts timestamp, event_id bigint"

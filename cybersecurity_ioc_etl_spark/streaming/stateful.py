@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .drain import drain_to_files, drain_to_memory, replay
+
 _TOTALS_OUT = T.StructType(
     [
         T.StructField("type", T.StringType(), False),
@@ -48,29 +50,29 @@ def _update_totals(
     yield pd.DataFrame({"type": [key[0]], "total": [total]})
 
 
-def running_ioc_type_totals(
-    rows: DataFrame, checkpoint_dir: str, out_dir: str
-) -> None:
-    """Cumulative count per IOC ``type`` across ALL runs sharing the
-    checkpoint.  Each micro-batch appends the new running total for the
-    types it touched; the latest row per type is the current counter
-    (max(total) — totals are monotone)."""
-    totals = rows.groupBy("type").applyInPandasWithState(
+def ioc_type_totals(rows: DataFrame) -> DataFrame:
+    """Streaming running total per IOC ``type``: each micro-batch emits
+    the new running total for the types it touched, so the latest row
+    per type is the current counter (max(total) — totals are
+    monotone)."""
+    return rows.groupBy("type").applyInPandasWithState(
         _update_totals,
         outputStructType=_TOTALS_OUT,
         stateStructType=_TOTALS_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        totals.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+
+
+def running_ioc_type_totals(
+    rows: DataFrame, checkpoint_dir: str, out_dir: str
+) -> None:
+    """Cumulative count per IOC ``type`` across ALL runs sharing the
+    checkpoint, appended to the parquet table in ``out_dir``
+    (``ioc_type_totals`` rows)."""
+    drain_to_files(
+        rows.sparkSession, ioc_type_totals(rows), out_dir, checkpoint_dir
     )
-    q.awaitTermination()
 
 
 EVENT_SCHEMA = T.StructType(
@@ -105,15 +107,7 @@ def windowed_counts_with_watermark(
             "n_events",
         )
     )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_to_files(spark, agg, out_dir, checkpoint_dir)
 
 
 # --- transformWithStateInPandas (Spark 4 arbitrary-state API) ----------
@@ -188,45 +182,26 @@ def run_tws_user_counts(
             "applyInPandasWithState (running_ioc_type_totals) covers the "
             "same stateful semantics on the stable API"
         )
-    import tempfile
-
     from ..sources.readers import normalize_event_ts
 
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="tws_src_")
-    batch.repartition(n_files).write.mode("overwrite").parquet(src_dir)
-    stream = normalize_event_ts(
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    ).filter(F.col("user_id") < max_user)
-
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        counts = stream.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=_UserCountProcessor(),
-            outputStructType=_TWS_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-        import uuid
-
-        name = f"tws_counts_{uuid.uuid4().hex[:8]}"
-        ckpt = tempfile.mkdtemp(prefix="ckpt_tws_")
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(name).localCheckpoint(eager=True)
+        with replay(spark, batch.repartition(n_files)) as raw:
+            stream = normalize_event_ts(raw).filter(F.col("user_id") < max_user)
+            counts = stream.groupBy("user_id").transformWithStateInPandas(
+                statefulProcessor=_UserCountProcessor(),
+                outputStructType=_TWS_OUT,
+                outputMode="Update",
+                timeMode="None",
+            )
+            return drain_to_memory(spark, counts, "update").localCheckpoint(
+                eager=True
+            )
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")

@@ -305,7 +305,7 @@ def test_committed_partial_dirs_skip_datafile_free_commits(spark, tmp_path):
     files); the fold must skip such dirs — reading them throws
     UNABLE_TO_INFER_SCHEMA — and an ALL-empty run must return [] so the
     caller's typed-empty fallback fires."""
-    from cybersecurity_ioc_etl_spark.streaming.pipeline import (
+    from cybersecurity_ioc_etl_spark.streaming.drain import (
         _committed_partial_dirs,
         _write_partial_bid,
     )
