@@ -309,9 +309,10 @@ def main() -> None:
     def _drop_checkpoints() -> None:
         # localCheckpoint blocks from completed queries accumulate in
         # executor memory across the (now 150+) headline list and turn
-        # late-list measurements into GC noise (the tools/skew_probe.py
-        # lesson at bench scale: graph-family rows measured 2-4x their
-        # floors only when run late in the session).  Each query is
+        # late-list measurements into GC noise (the lesson of
+        # 72ef586:tools/skew_probe.py at bench scale: graph-family rows
+        # measured 2-4x their floors only when run late in the
+        # session).  Each query is
         # fully materialized before the next starts, so its persisted
         # RDDs are garbage — drop them between queries.  ASSUMPTION: no
         # headline query caches data for reuse ACROSS calls (none do; a

@@ -878,7 +878,7 @@ def q_media_dhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter.  This is multi-index hashing (Norouzi et al.) stated
     honestly: 8-bit bands give 256 buckets per band, a CONSTANT-FACTOR
     candidate prune (measured 3.7× on this skewed fixture,
-    tools/dhash_probe.py) with a verify that is one JVM popcount per
+    72ef586:tools/dhash_probe.py) with a verify that is one JVM popcount per
     candidate — the probe holds 341M candidates to 5.2 s.  The
     exponential-prune scale path is a WIDER perceptual hash (256-bit
     pHash → 2^32 buckets per byte-band) on this exact machinery.

@@ -694,6 +694,14 @@ def connected_components(
     return labels.select(F.col("nid"), F.col("label").alias("component"))
 
 
+# Ceilings of the collected fold below: above every graph its callers
+# build today (the 300-vector dbscan slice — at most 300·299 directed
+# core edges — and the 150-doc SimHash slice).  Past them the O(V·E)
+# one-task fold would be a straggler or an OOM, so it raises instead.
+_CC_FOLD_MAX_NODES = 1_000
+_CC_FOLD_MAX_EDGES = 100_000
+
+
 def connected_components_fold(
     nodes: DataFrame, edges: DataFrame, id_col: str = "id"
 ) -> DataFrame:
@@ -708,8 +716,9 @@ def connected_components_fold(
     jobs are pure scheduling at this size; r15, guide §1.2/§2.4).
 
     ONLY for graphs with a schema/oracle-stated node bound (the dbscan
-    slice): the fold collects nodes and edges to one row.  Data-scale
-    graphs stay on the checkpointed loop."""
+    slice): the fold collects nodes and edges to one row, and raises
+    past ``_CC_FOLD_MAX_NODES`` nodes or ``_CC_FOLD_MAX_EDGES`` edges.
+    Data-scale graphs stay on the checkpointed loop."""
     lookup = lambda ns, vid: (  # noqa: E731
         f"aggregate(filter({ns}, clm -> clm.id = {vid}),"
         f" CAST(NULL AS BIGINT), (clr, clm) -> clm.lbl)"
@@ -742,7 +751,20 @@ def connected_components_fold(
             ).alias("eg")
         )
     )
-    return one.select(F.explode(F.expr(fold)).alias("l")).select(
+    guarded = F.when(
+        (F.size("nds") > _CC_FOLD_MAX_NODES)
+        | (F.size("eg") > _CC_FOLD_MAX_EDGES),
+        F.raise_error(
+            F.format_string(
+                "connected_components_fold: %d nodes / %d edges exceed the"
+                f" {_CC_FOLD_MAX_NODES} / {_CC_FOLD_MAX_EDGES} ceiling;"
+                " use connected_components",
+                F.size("nds"),
+                F.size("eg"),
+            )
+        ),
+    ).otherwise(F.expr(fold))
+    return one.select(F.explode(guarded).alias("l")).select(
         F.col("l.id").cast(idt).alias("nid"),
         F.col("l.lbl").cast(idt).alias("component"),
     )
@@ -936,9 +958,9 @@ def q_dedup_keep_best_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined, the hot key split {_SALT_N} ways — and phase 2
     min-merges the ≤{_SALT_N} partials per fingerprint, so no task ever
     holds more than copies/{_SALT_N} of a hot group (the
-    salted_source_profile pattern).  tools/skew_probe.py clones one
-    document k× and shows this wall staying flat while the window
-    variant's hot task grows linearly.
+    salted_source_profile pattern).  72ef586:tools/skew_probe.py cloned one
+    document k× and showed this wall staying flat while the window
+    variant's hot task grows linearly (SCALE.md).
 
     The election is a struct-min over (-n_tokens, doc_id): min-merge is
     associative+commutative, so phase order can't change the winner —
@@ -1645,8 +1667,8 @@ def q_ppjoin_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification intersects per-doc digest ARRAYS, so no stage ever
     carries shingle text.  100 TB variant: band the global order into
     ranges so the prefix self-join co-partitions by shingle range.
-    tools/ppjoin_probe.py carries the scale receipt (wall tracks
-    candidate pairs, not docs^2)."""
+    The scale receipt (wall tracks candidate pairs, not docs^2) is in
+    SCALE.md, measured by 72ef586:tools/ppjoin_probe.py."""
     d = load_table(spark, sf_dir, "documents", fan_out=True).filter(
         F.col("text").isNotNull()
     )
@@ -1654,9 +1676,7 @@ def q_ppjoin_doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ppjoin_pairs(d: DataFrame) -> DataFrame:
-    """The prefix-filter join body over any (doc_id, text) frame —
-    shared by the registered query and tools/ppjoin_probe.py (which
-    feeds it synthetic corpus scale-ups)."""
+    """The prefix-filter join body over any (doc_id, text) frame."""
     # shingle text is digested to md5-prefix ints IMMEDIATELY and the
     # (doc_id, digest) frame materialized once: three consumers (df
     # census, rank window, verify arrays) would otherwise re-shingle
@@ -2390,7 +2410,7 @@ def span_positional_census(
 
     - True (default): the shared-gram set is BROADCAST into the probe —
       right while duplicated mass stays vocabulary-bounded
-      (tools/span_probe.py shows it saturating at the distinct-gram
+      (72ef586:tools/span_probe.py showed it saturating at the distinct-gram
       vocabulary under corpus cloning);
     - False: the gram-space PARTITIONED fallback for when duplicated
       mass outgrows the broadcast ceiling (boilerplate-heavy corpora at
@@ -2550,7 +2570,7 @@ def q_substring_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boilerplate-heavy corpora) span_positional_census(broadcast_shared
     =False) switches the probe to a gram-keyed ShuffledHashJoin —
     same results, pinned in tests/test_plans.py, crossover measured in
-    tools/span_probe.py.  The interval union is a per-doc ROWS lag
+    72ef586:tools/span_probe.py.  The interval union is a per-doc ROWS lag
     window — one shingle shuffle + one doc_id shuffle total.  At
     100 TB, k is the grain/cost lever and the census is incrementally
     maintainable exactly like incremental_dedup_new_docs (new docs only

@@ -2049,12 +2049,21 @@ def _lv_pair_labels_sql(weighted: bool) -> str:
   wz -> wz)"""
 
 
+# Ceiling of the collected pair fold: above the 25-nation trade graph
+# (at most 25·25 directed pairs with self-loops) and its contracted
+# community graph.  The fold's nodes are the edges' endpoints, so the
+# edge count bounds both; past it the one-task fold raises instead of
+# straggling.
+_LV_FOLD_MAX_EDGES = 1_000
+
+
 def _lv_pair_labels(
     edges: DataFrame, weighted: bool
 ) -> DataFrame:
     """(id, lbl) labels after one greedy parity pair, via the collected
     JVM fold — plus the two half move counts as repeated columns.
-    ``edges`` is (a, b) or (a, b, w)."""
+    ``edges`` is (a, b) or (a, b, w); more than ``_LV_FOLD_MAX_EDGES``
+    of them raises."""
     cols = [
         F.col("a").cast("bigint").alias("a"),
         F.col("b").cast("bigint").alias("b"),
@@ -2068,7 +2077,18 @@ def _lv_pair_labels(
         F.collect_list(F.struct("a", "b", "w")).alias("eg")
     )
     r = one.select(
-        F.expr(_lv_pair_labels_sql(weighted)).alias("r")
+        F.when(
+            F.size("eg") > _LV_FOLD_MAX_EDGES,
+            F.raise_error(
+                F.format_string(
+                    "_lv_pair_labels: %d edges exceed the"
+                    f" {_LV_FOLD_MAX_EDGES} ceiling",
+                    F.size("eg"),
+                )
+            ),
+        )
+        .otherwise(F.expr(_lv_pair_labels_sql(weighted)))
+        .alias("r")
     ).select(
         F.explode("r.labs").alias("l"), "r.nmv_even", "r.nmv_odd"
     )
@@ -2563,10 +2583,12 @@ def q_trade_louvain_two_level(
 # fixpoint (first non-improving pair), the full phase-1 algorithm
 # ---------------------------------------------------------------------------
 
-_LVC_PAIRS = 4  # bounded unroll: tools/louvain_probe.py measures the
-# stop pair at 3 (sf0.001, where raw moves OSCILLATE 3/0 forever) and
-# 2 (sf0.01/sf0.1); if a future fixture climbs past 4 pairs the probe
-# flags it and the query (plus its oracle) grows a pair.
+_LVC_PAIRS = 4  # bounded unroll: the stop pair is 3 (sf0.001, where raw
+# moves OSCILLATE 3/0 forever) and 2 (sf0.01/sf0.1)
+# (72ef586:tools/louvain_probe.py).  tests/test_graph_quality.py::
+# test_louvain_converged_level_stops_at_first_nonimproving_pair fails
+# if a fixture climbs past 4 pairs; then the query (plus its oracle)
+# grows a pair.
 
 
 def _lvc_oracle() -> str:
@@ -2766,7 +2788,7 @@ def q_trade_louvain_converged_level(
     one pair per level): greedy move pairs iterate until the first
     NON-IMPROVING pair in exact-integer modularity, with the stop
     condition on Q — NOT on zero moves — because the probe
-    (tools/louvain_probe.py) shows semi-synchronous parity moves can
+    (72ef586:tools/louvain_probe.py) showed semi-synchronous parity moves can
     OSCILLATE forever at constant Q (sf0.001: a 3-node cycle flips
     3/0 moves every pair with q_num pinned at 5476 — the classic
     synchronous label cycle, which a moves-based loop never exits).
@@ -2790,8 +2812,8 @@ def q_trade_louvain_converged_level(
     loop (r14 optimization: the per-round frame shape measured 306
     jobs / 642 stages of scheduling).  At 100 TB the unroll bound is
     the lever (production Louvain caps phase-1 sweeps — Blondel et
-    al. report a handful suffice; the probe sizes the cap per
-    dataset); a data-scale community graph would use the checkpointed
+    al. report a handful suffice; the convergence pin sizes the cap
+    per dataset); a data-scale community graph would use the checkpointed
     `_louvain_half` frame loop instead (trade_louvain_move keeps that
     plan pinned)."""
     from pyspark.sql import Window

@@ -687,12 +687,13 @@ def q_linkage_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r13 family)
 # ---------------------------------------------------------------------------
 
-_EM_ROUNDS = 32  # bounded unroll: tools/em_probe.py measures the stop
-# round (first mean per-pair ll improvement below one 1e-6-nat grain)
-# at 28 (sf0.001), 21 (sf0.01), 10 (sf0.1) — larger fixtures converge
-# FASTER because the match prior separates sooner; if a future fixture
-# climbs past 32 the probe flags it and the query (plus its oracle)
-# grows rounds.
+_EM_ROUNDS = 32  # bounded unroll: the stop round (first mean per-pair
+# ll improvement below one 1e-6-nat grain) is 28 (sf0.001), 21
+# (sf0.01), 10 (sf0.1) (72ef586:tools/em_probe.py) — larger fixtures
+# converge FASTER because the match prior separates sooner.
+# tests/test_linkage_quality.py::test_linkage_em_converged_stops_within_unroll
+# fails if a fixture's stop round climbs past 32; then the query (plus
+# its oracle) grows rounds.
 
 
 def _em_estep_sql(pcte: str, ecte: str) -> str:
@@ -947,7 +948,7 @@ def q_linkage_em_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The stop rule is a per-pair GRAIN tolerance, not dll <= 0: EM's
     geometric tail keeps the exact-integer ll creeping upward long
-    past usefulness — tools/em_probe.py measures the strict dll<=0
+    past usefulness — 72ef586:tools/em_probe.py measured the strict dll<=0
     plateau at rounds 31/28/15 (sf0.001/0.01/0.1), hugging any
     reasonable unroll bound — so the deterministic fixpoint is the
     first round whose mean per-pair improvement falls below ONE
@@ -971,9 +972,9 @@ def q_linkage_em_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     many rounds the unroll bound allows (r14 optimization: the
     per-round frame loop measured 208 jobs / 270 single-row tasks —
     pure scheduling).  At 100 TB the unroll bound is the lever,
-    exactly as Louvain's pair cap: the probe sizes it per dataset,
-    and larger fixtures converge FASTER (sf0.1 stops at round 10 vs
-    sf0.001's 28) because the match prior separates sooner."""
+    exactly as Louvain's pair cap: the convergence pin sizes it per
+    dataset, and larger fixtures converge FASTER (sf0.1 stops at round
+    10 vs sf0.001's 28) because the match prior separates sooner."""
     pairs = _lnk_pairs(spark, sf_dir, materialize=False)
     cens = (
         pairs.groupBy("a_name", "a_seg", "a_bal")

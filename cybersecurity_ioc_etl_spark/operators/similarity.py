@@ -449,10 +449,9 @@ def ann_bucketed_candidates(
     e: DataFrame, n_queries: int = 4, bucket_match: bool = True
 ) -> DataFrame:
     """Bucket-matched candidate pairs with exact integer dot products —
-    the pair-generation core of ``ann_bucketed_topk`` exposed on a plain
-    (vec_id, embedding) frame so the scale probe (tools/ann_probe.py)
-    can measure candidate counts on cloned corpora.  Returns one row per
-    (qid, vec_id) CANDIDATE — a corpus vector sharing the query's
+    the pair-generation core of ``ann_bucketed_topk`` and of the
+    streaming ANN serve, on a plain (vec_id, embedding) frame.  Returns
+    one row per (qid, vec_id) CANDIDATE — a corpus vector sharing the query's
     hyperplane bucket — with sq/qsq/dot_i ready for scoring.  Candidate
     volume per query is corpus/2^bits in expectation; every non-candidate
     is eliminated by the bucket equi-join BEFORE any pair row exists.
@@ -564,7 +563,7 @@ def q_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets BEFORE the pair products exist, and the final top-k is a
     window over per-query groups (shuffle keyed on qid, never a global
     sort).  Candidates scale as corpus/2^bits per query, not corpus —
-    tools/ann_probe.py measures exactly that on cloned corpora."""
+    measured on cloned corpora in SCALE.md (72ef586:tools/ann_probe.py)."""
     return ann_bucketed_topk_frame(
         load_table(spark, sf_dir, "embeddings", fan_out=True), n_queries=4, k=10
     )
@@ -1406,12 +1405,12 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_audit_frame(e, k=_KMEANS_K)
 
 
-def _semdedup_parts(
-    e: DataFrame, k: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(counts, sq, pd) for an embeddings frame: one Lloyd assignment to
-    the first-k seeds, then within-cluster pair dots joined on (cid, i)
-    so pairs never form across clusters."""
+def semdedup_audit_frame(e: DataFrame, k: int) -> DataFrame:
+    """Per-cluster prune audit (cid, n_members, n_dropped, n_kept) for
+    any embeddings frame and cluster count — the parameterized body of
+    q_semdedup_prune: one Lloyd assignment to the first-k seeds, then
+    within-cluster pair dots joined on (cid, i) so pairs never form
+    across clusters."""
     comp = (
         e.select(
             "vec_id",
@@ -1442,21 +1441,6 @@ def _semdedup_parts(
         )
         .agg(F.sum(F.col("a.xi") * F.col("b.xi")).alias("dot_i"))
     )
-    return counts, sq, pd
-
-
-def semdedup_candidate_pairs(e: DataFrame, k: int) -> DataFrame:
-    """The within-cluster candidate volume — what the exact-scoring
-    stage actually pays; tools/semdedup_probe.py counts this against
-    the corpus-squared brute force."""
-    return _semdedup_parts(e, k)[2]
-
-
-def semdedup_audit_frame(e: DataFrame, k: int) -> DataFrame:
-    """Per-cluster prune audit (cid, n_members, n_dropped, n_kept) for
-    any embeddings frame and cluster count — the parameterized body of
-    q_semdedup_prune."""
-    counts, sq, pd = _semdedup_parts(e, k)
     sa, sb = sq.alias("sa"), sq.alias("sb")
     cos = F.round(
         (F.col("dot_i").cast("double") / F.lit(1e14))
@@ -1740,18 +1724,15 @@ def _pq_adc_scored(
     sf_dir: str,
     comp: DataFrame,
     members: DataFrame | None = None,
-    codes: DataFrame | None = None,
 ) -> DataFrame:
     """(vec_id, adc_i): every corpus vector's exact-integer asymmetric
     PQ distance to the query (vec_id=0) — the ADC serving core shared
     by ivfpq_adc_topk (whole corpus) and ivfpq_trained_topk (one
     trained cell).  ``members`` restricts scoring to a (vec_id) subset
     BEFORE the table join — the cell prune must precede per-code work.
-    ``codes`` injects a PRE-BUILT code table (the stored index): in
-    production the encode ran once at ingest and serving reads 8 ints
-    per vector; rebuilding codes per query (the default here, honest
-    for the fixture which persists no index) pays the encode again —
-    tools/pq_probe.py measures both sides of that split."""
+    Codes are rebuilt per query (the fixture persists no index); in
+    production the encode runs once at ingest and serving reads 8 ints
+    per vector."""
     sub = comp.select("vec_id", F.expr(f"i div {_PQ_DIMS}").alias("m"), "i", "xi")
     cent = sub.filter(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("c"), "m", "i", F.col("xi").alias("ci")
@@ -1766,9 +1747,9 @@ def _pq_adc_scored(
             ).alias("dist_i")
         )
     )
-    if codes is None:
-        codes = _pq_codes_frame(spark, sf_dir, comp=comp)
-    codes = codes.filter(F.col("vec_id") != 0)
+    codes = _pq_codes_frame(spark, sf_dir, comp=comp).filter(
+        F.col("vec_id") != 0
+    )
     if members is not None:
         codes = codes.join(members, "vec_id")
     # rename the table side: codes and tbl share lineage (both derive

@@ -708,12 +708,11 @@ def tfidf_posting_dots(
 ) -> tuple[DataFrame, DataFrame]:
     """The posting-join core of ``tfidf_doc_similarity_pairs`` on a
     plain (doc_id, text) frame: returns (dots, norms) where dots is one
-    row per document pair sharing at least one surviving term.  Exposed
-    so tools/posting_probe.py can measure pair volume against
-    Σ df·(df-1)/2 of surviving terms on growing corpus slices — the
-    receipt that pair work tracks the posting fan-out, with ``df_cap``
-    the skew lever that drops stop-terms before they concentrate a
-    quadratic bucket on one reducer."""
+    row per document pair sharing at least one surviving term.  The
+    join's instance count equals Σ df·(df-1)/2 of surviving terms
+    (pinned in tests/test_text_queries.py), so pair work tracks the
+    posting fan-out, with ``df_cap`` the skew lever that drops stop-terms
+    before they concentrate a quadratic bucket on one reducer."""
     tf = (
         d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -2012,9 +2011,7 @@ def q_viterbi_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def viterbi_segment(d: DataFrame) -> DataFrame:
-    """The segmentation DP over any (doc_id, text) frame — shared by
-    the registered query and tools/viterbi_probe.py (which feeds it
-    corpus scale-ups to pin the vocabulary-grain cost law)."""
+    """The segmentation DP over any (doc_id, text) frame."""
     tok = d.select(
         F.explode(
             F.split(_dedup.ascii_fold(F.trim(F.col("text"))), r"\s+")

@@ -401,8 +401,8 @@ def run_stream_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = value_stats(e).localCheckpoint(eager=True)
 
-    def score(batch: DataFrame, _bid: int) -> DataFrame | None:
-        return None if batch.isEmpty() else score_value_outliers(batch, stats)
+    def score(batch: DataFrame, _bid: int) -> DataFrame:
+        return score_value_outliers(batch, stats)
 
     dirs = drain_partials(spark, e.repartition(2), score)
     if not dirs:
@@ -516,9 +516,7 @@ def run_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_chars"
     )
 
-    def keep(batch: DataFrame, _bid: int) -> DataFrame | None:
-        if batch.isEmpty():
-            return None
+    def keep(batch: DataFrame, _bid: int) -> DataFrame:
         return batch.filter(
             hash_bucket(F.col("doc_id"), 10000) < mixture_keep_bp()
         )
@@ -1316,9 +1314,7 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "event_type", "value")
     )
 
-    def partial_bars(batch: DataFrame, _bid: int) -> DataFrame | None:
-        if batch.isEmpty():
-            return None
+    def partial_bars(batch: DataFrame, _bid: int) -> DataFrame:
         vi = F.round(F.col("value") * F.lit(10000.0)).cast("bigint")
         ev = batch.select(
             F.date_format(

@@ -8,6 +8,8 @@ fixpoint every k rounds instead of every round must not change labels.
 
 from __future__ import annotations
 
+import pytest
+
 from cybersecurity_ioc_etl_spark.operators.dedup import connected_components
 
 
@@ -79,3 +81,22 @@ def test_fold_matches_loop_on_known_shapes(spark):
             for r in connected_components_fold(n, e, id_col="id").collect()
         }
         assert fold == loop, (nodes, edges)
+
+
+def test_fold_raises_past_its_node_ceiling(spark):
+    """The collected fold does O(V·E) work in one task, so a graph past
+    its stated ceiling must fail loudly, not straggle or OOM."""
+    from cybersecurity_ioc_etl_spark.operators.dedup import (
+        _CC_FOLD_MAX_NODES,
+        connected_components_fold,
+    )
+
+    e = spark.createDataFrame([], "src bigint, dst bigint")
+
+    def fold(n_nodes):
+        n = spark.range(n_nodes).withColumnRenamed("id", "vid")
+        return connected_components_fold(n, e, id_col="vid").collect()
+
+    assert len(fold(_CC_FOLD_MAX_NODES)) == _CC_FOLD_MAX_NODES
+    with pytest.raises(Exception, match="exceed the"):
+        fold(_CC_FOLD_MAX_NODES + 1)

@@ -10,6 +10,8 @@ moves happen and Q strictly improves from the singleton seed.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from cybersecurity_ioc_etl_spark import operators as _ops
@@ -85,7 +87,7 @@ def test_louvain_converged_level_stops_at_first_nonimproving_pair(
     unrolled bound, (b) climb Q strictly on every pair BEFORE the
     stop, (c) stop exactly where dQ first fails to improve, and
     (d) report the best labeling as the pair before the stop —
-    Q-based termination per tools/louvain_probe.py (moves can
+    Q-based termination per 72ef586:tools/louvain_probe.py (moves can
     oscillate forever at constant Q, so zero-moves is NOT the
     fixpoint test)."""
     rows = {
@@ -103,3 +105,36 @@ def test_louvain_converged_level_stops_at_first_nonimproving_pair(
     assert rows[0].best_q == best.q
     # the best labeling's Q dominates every pair's Q through the stop
     assert all(rows[k].q_num <= best.q_num for k in range(stop + 1))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_ktruss_two_rounds_reach_fixpoint(spark, sf_dir, sf):
+    """trade_ktruss_edges unrolls two peeling rounds (the oracle's
+    depth), so its output is the k-truss only if a third round would
+    peel nothing: every reported edge must already close >= k-2
+    triangles.  Edges of the second-round graph with zero support are
+    absent from the output, but they sit in no triangle, so peeling
+    them changes no other edge's support."""
+    from cybersecurity_ioc_etl_spark.operators.graph import _TRUSS_K
+
+    rows = _ops.QUERIES["trade_ktruss_edges"](
+        spark, os.path.join(os.path.dirname(sf_dir), sf)
+    ).collect()
+    assert all(r.support >= _TRUSS_K - 2 for r in rows), [
+        r for r in rows if r.support < _TRUSS_K - 2
+    ]
+
+
+def test_louvain_pair_fold_raises_past_its_edge_ceiling(spark):
+    """The collected parity-pair fold runs in one task, so an edge list
+    past its stated ceiling must fail loudly, not straggle or OOM."""
+    from cybersecurity_ioc_etl_spark.operators.graph import (
+        _LV_FOLD_MAX_EDGES,
+        _lv_pair_labels,
+    )
+
+    edges = spark.range(_LV_FOLD_MAX_EDGES + 1).selectExpr(
+        "id AS a", "id + 1 AS b"
+    )
+    with pytest.raises(Exception, match="exceed the"):
+        _lv_pair_labels(edges, weighted=False).collect()

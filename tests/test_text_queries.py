@@ -1,8 +1,8 @@
 """Posting-join df-cap invariants (VERDICT r4 ask #6): the posting
 self-join's pair volume equals the closed form Σ df·(df−1)/2 predicted
 by the df census alone, and a cap below the stop-terms' df collapses
-the quadratic before the join exists.  tools/posting_probe.py measures
-the same law as wall time at sf0.1; this pins it exactly."""
+the quadratic before the join exists.  72ef586:tools/posting_probe.py
+measured the same law as wall time at sf0.1; this pins it exactly."""
 
 from __future__ import annotations
 
