@@ -434,21 +434,23 @@ def kmv_token_hashes(docs: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def kmv_bottom_k(dh: DataFrame, k: int = _KMV_K) -> DataFrame:
-    """Per-source bottom-k of the distinct hash universe — THE KMV
-    sketch.  Mergeable: the union of per-batch bottom-k sets contains
-    the global bottom-k, so re-ranking a union of partials yields the
-    identical sketch (exercised by stream_kmv_merge)."""
+def kmv_bottom_k(dh: DataFrame) -> DataFrame:
+    """Per-source bottom-k (k = ``_KMV_K``) of the distinct hash
+    universe — THE KMV sketch.  Mergeable: the union of per-batch
+    bottom-k sets contains the global bottom-k, so re-ranking a union of
+    partials yields the identical sketch (exercised by
+    stream_kmv_merge)."""
     w = Window.partitionBy("source").orderBy("h")
     return (
         dh.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= _KMV_K)
         .drop("rn")
     )
 
 
-def kmv_estimate(sk: DataFrame, k: int = _KMV_K) -> DataFrame:
-    """(source, k_used, kth_hash, est_distinct) from a bottom-k frame:
+def kmv_estimate(sk: DataFrame) -> DataFrame:
+    """(source, k_used, kth_hash, est_distinct) from a bottom-k frame
+    (k = ``_KMV_K``):
     est = (k−1)·2³² / kth for a full sketch, the exact seen-count when
     fewer than k distinct values exist.  One double division per group
     from exact integers — bit-identical cross-engine."""
@@ -461,10 +463,10 @@ def kmv_estimate(sk: DataFrame, k: int = _KMV_K) -> DataFrame:
         "k_used",
         "kth_hash",
         F.when(
-            F.col("k_used") < k, F.col("k_used").cast("double")
+            F.col("k_used") < _KMV_K, F.col("k_used").cast("double")
         )
         .otherwise(
-            F.lit(float(k - 1))
+            F.lit(float(_KMV_K - 1))
             * F.lit(4294967296.0)
             / F.col("kth_hash").cast("double")
         )

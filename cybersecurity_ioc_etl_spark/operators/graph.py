@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.readers import load_table
@@ -2057,6 +2057,21 @@ def _lv_pair_labels_sql(weighted: bool) -> str:
 _LV_FOLD_MAX_EDGES = 1_000
 
 
+def _lv_fold_guarded(fold: Column, who: str) -> Column:
+    """``fold`` over the collected edge array ``eg``, or a raise when
+    ``eg`` holds more than ``_LV_FOLD_MAX_EDGES`` edges — checked in the
+    fold's own projection, so no job is added."""
+    return F.when(
+        F.size("eg") > _LV_FOLD_MAX_EDGES,
+        F.raise_error(
+            F.format_string(
+                f"{who}: %d edges exceed the {_LV_FOLD_MAX_EDGES} ceiling",
+                F.size("eg"),
+            )
+        ),
+    ).otherwise(fold)
+
+
 def _lv_pair_labels(
     edges: DataFrame, weighted: bool
 ) -> DataFrame:
@@ -2077,18 +2092,9 @@ def _lv_pair_labels(
         F.collect_list(F.struct("a", "b", "w")).alias("eg")
     )
     r = one.select(
-        F.when(
-            F.size("eg") > _LV_FOLD_MAX_EDGES,
-            F.raise_error(
-                F.format_string(
-                    "_lv_pair_labels: %d edges exceed the"
-                    f" {_LV_FOLD_MAX_EDGES} ceiling",
-                    F.size("eg"),
-                )
-            ),
-        )
-        .otherwise(F.expr(_lv_pair_labels_sql(weighted)))
-        .alias("r")
+        _lv_fold_guarded(
+            F.expr(_lv_pair_labels_sql(weighted)), "_lv_pair_labels"
+        ).alias("r")
     ).select(
         F.explode("r.labs").alias("l"), "r.nmv_even", "r.nmv_odd"
     )
@@ -2779,6 +2785,28 @@ def _lvc_fold_sql(pairs: int) -> str:
   z -> z)"""
 
 
+def _lvc_pair_rows(edges: DataFrame) -> DataFrame:
+    """One row per move pair from the collected ``_lvc_fold_sql`` fold
+    over the (a, b) edge frame, which runs in one task and so raises past
+    ``_LV_FOLD_MAX_EDGES`` edges.  The trade graph's distinct directed
+    non-loop edges number at most 25·24 = 600, under that ceiling."""
+    one = edges.agg(
+        F.collect_list(
+            F.struct(
+                F.col("a").cast("bigint").alias("a"),
+                F.col("b").cast("bigint").alias("b"),
+            )
+        ).alias("eg")
+    )
+    return one.select(
+        F.explode(
+            _lv_fold_guarded(
+                F.expr(_lvc_fold_sql(_LVC_PAIRS)), "_lvc_pair_rows"
+            )
+        ).alias("r")
+    ).select("r.*")
+
+
 @query("trade_louvain_converged_level", oracle=_lvc_oracle())
 def q_trade_louvain_converged_level(
     spark: SparkSession, sf_dir: str
@@ -2824,17 +2852,7 @@ def q_trade_louvain_converged_level(
         .union(e0.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
     )
-    one = ue.agg(
-        F.collect_list(
-            F.struct(
-                F.col("a").cast("bigint").alias("a"),
-                F.col("b").cast("bigint").alias("b"),
-            )
-        ).alias("eg")
-    )
-    rows = one.select(
-        F.explode(F.expr(_lvc_fold_sql(_LVC_PAIRS))).alias("r")
-    ).select("r.*")
+    rows = _lvc_pair_rows(ue)
     w_p = Window.orderBy("pair")
     w = rows.select(
         "pair",

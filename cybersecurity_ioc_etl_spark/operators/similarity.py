@@ -445,25 +445,6 @@ SELECT qid, vec_id, rnk, cosine_sim FROM (
 """
 
 
-def ann_bucketed_candidates(
-    e: DataFrame, n_queries: int = 4, bucket_match: bool = True
-) -> DataFrame:
-    """Bucket-matched candidate pairs with exact integer dot products —
-    the pair-generation core of ``ann_bucketed_topk`` and of the
-    streaming ANN serve, on a plain (vec_id, embedding) frame.  Returns
-    one row per (qid, vec_id) CANDIDATE — a corpus vector sharing the query's
-    hyperplane bucket — with sq/qsq/dot_i ready for scoring.  Candidate
-    volume per query is corpus/2^bits in expectation; every non-candidate
-    is eliminated by the bucket equi-join BEFORE any pair row exists.
-
-    ``bucket_match=False`` drops the bucket constraint — brute-force
-    candidates over the full corpus, the bounded ground truth the
-    recall audit (``ann_recall_audit``) scores the bucketed plan
-    against.  Never use it as a serving path."""
-    comp, meta = _ann_comp_meta(e)
-    return _ann_candidates_from(comp, meta, n_queries, bucket_match)
-
-
 def _ann_comp_meta(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(comp, meta): exploded integer components + per-vector (bucket,
     sq-norm) — the shared substrate of every bucketed-ANN frame."""
@@ -492,14 +473,29 @@ def _ann_comp_meta(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     return comp, meta
 
 
+# The bucketed-ANN query batch is vec_id < _ANN_N_QUERIES of the corpus
+# frame; every ANN row answers it with the top _ANN_K.
+_ANN_N_QUERIES = 4
+_ANN_K = 10
+
+
 def _ann_candidates_from(
-    comp: DataFrame, meta: DataFrame, n_queries: int, bucket_match: bool
+    comp: DataFrame, meta: DataFrame, bucket_match: bool
 ) -> DataFrame:
+    """Candidate pairs with exact integer dot products — one row per
+    (qid, vec_id) with sq/qsq/dot_i ready for scoring.  With
+    ``bucket_match`` a candidate is a corpus vector sharing the query's
+    hyperplane bucket, so candidate volume per query is corpus/2^bits in
+    expectation and every non-candidate is eliminated by the bucket
+    equi-join BEFORE any pair row exists.  Without it the candidates are
+    brute force over the full corpus: the bounded ground truth the
+    recall audit (``ann_recall_audit``) scores the bucketed plan
+    against, never a serving path."""
     qside = (
-        comp.filter(F.col("vec_id") < n_queries)
+        comp.filter(F.col("vec_id") < _ANN_N_QUERIES)
         .select(F.col("vec_id").alias("qid"), F.col("i").alias("qi"), F.col("xi").alias("qxi"))
         .join(
-            meta.filter(F.col("vec_id") < n_queries).select(
+            meta.filter(F.col("vec_id") < _ANN_N_QUERIES).select(
                 F.col("vec_id").alias("qid"),
                 F.col("bucket").alias("qbucket"),
                 F.col("sq").alias("qsq"),
@@ -507,7 +503,7 @@ def _ann_candidates_from(
             "qid",
         )
     )
-    data = comp.filter(F.col("vec_id") >= n_queries).join(
+    data = comp.filter(F.col("vec_id") >= _ANN_N_QUERIES).join(
         F.broadcast(meta.select("vec_id", "bucket", "sq")), "vec_id"
     )
     cond = F.col("i") == F.col("qi")
@@ -520,13 +516,12 @@ def _ann_candidates_from(
     )
 
 
-def ann_bucketed_topk_frame(
-    e: DataFrame, n_queries: int = 4, k: int = 10, bucket_match: bool = True
-) -> DataFrame:
-    """Score + per-query top-k over ``ann_bucketed_candidates``."""
-    return _ann_score_topk(
-        ann_bucketed_candidates(e, n_queries, bucket_match=bucket_match), k
-    )
+def ann_bucketed_topk_frame(e: DataFrame) -> DataFrame:
+    """Bucketed top-``_ANN_K`` of the ``_ANN_N_QUERIES`` query vectors of
+    a plain (vec_id, embedding) frame — the plan of ``ann_bucketed_topk``
+    and of the streaming ANN serve."""
+    comp, meta = _ann_comp_meta(e)
+    return _ann_score_topk(_ann_candidates_from(comp, meta, True), _ANN_K)
 
 
 def _ann_score_topk(dots: DataFrame, k: int) -> DataFrame:
@@ -565,7 +560,7 @@ def q_ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort).  Candidates scale as corpus/2^bits per query, not corpus —
     measured on cloned corpora in SCALE.md (72ef586:tools/ann_probe.py)."""
     return ann_bucketed_topk_frame(
-        load_table(spark, sf_dir, "embeddings", fan_out=True), n_queries=4, k=10
+        load_table(spark, sf_dir, "embeddings", fan_out=True)
     )
 
 
@@ -678,10 +673,10 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp, meta = _ann_comp_meta(e)
     comp = comp.localCheckpoint(eager=True)
     meta = meta.localCheckpoint(eager=True)
-    alldots = _ann_candidates_from(comp, meta, 4, False).localCheckpoint(
+    alldots = _ann_candidates_from(comp, meta, False).localCheckpoint(
         eager=True
     )
-    true_k = _ann_score_topk(alldots, 10)
+    true_k = _ann_score_topk(alldots, _ANN_K)
     dmeta = meta.select("vec_id", "bucket")
     qmeta = meta.select(
         F.col("vec_id").alias("qid"), F.col("bucket").alias("qbucket")
@@ -692,7 +687,7 @@ def q_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bucket") == F.col("qbucket"))
         .select("qid", "vec_id", "sq", "qsq", "dot_i")
     )
-    ann_k = _ann_score_topk(ann_dots, 10)
+    ann_k = _ann_score_topk(ann_dots, _ANN_K)
     # ann side is referenced twice (hit join + per-query count): its
     # candidate generation is the expensive part, materialize once
     ann_ids = ann_k.select("qid", "vec_id").localCheckpoint(eager=True)
@@ -3917,21 +3912,16 @@ _NND_RK_SQL = f"""SELECT vec_id,
   FROM ids"""
 
 
-def _nnd_core_sql(comp_where: str = "TRUE") -> str:
-    """The NND build CTE chain (comp … ranked) over embeddings rows
-    satisfying ``comp_where`` — the build-round instantiation of
-    ``_nnd_chain_sql`` (the graph-serve oracle instantiates the same
-    chain over its clustered fixture)."""
-    return f"""comp AS (
+# the build-round instantiation of the NND chain, over all embeddings
+# rows (the graph-serve oracle instantiates the same chain over its
+# clustered fixture)
+_NND_ORACLE = f"""
+WITH comp AS (
   SELECT vec_id, generate_subscripts(embedding, 1) AS i,
          {_MI_SQL.format(x='unnest(CAST(embedding AS DOUBLE[]))')} AS xi
-  FROM embeddings WHERE {comp_where}
+  FROM embeddings
 ),
-{_nnd_chain_sql(_NND_K, _NND_RK_SQL, "comp")}"""
-
-
-_NND_ORACLE = f"""
-WITH {_nnd_core_sql()}
+{_nnd_chain_sql(_NND_K, _NND_RK_SQL, "comp")}
 SELECT r.v AS vec_id,
   CAST(r.rn AS BIGINT) AS rnk,
   r.u AS neighbor_id,
@@ -4397,16 +4387,13 @@ def _gs_beam(
     edges: DataFrame,
     h: int,
     b: int,
-    per_query: bool = False,
 ) -> DataFrame:
-    """Single-setting beam search: h hops of width b from the seed set;
-    returns the visited (qid, u, d2) frame.  With ``per_query`` the
-    seed frame already carries (qid, u) — the IVF-routed seeding mode —
-    instead of one global seed set.  Thin wrapper over the cfg-tagged
-    chain (one setting, cfg 0)."""
-    pairs = seeds if per_query else qids.crossJoin(seeds)
+    """Single-setting beam search: h hops of width b from one global
+    seed set, every query starting from all of it; returns the visited
+    (qid, u, d2) frame.  Thin wrapper over the cfg-tagged chain (one
+    setting, cfg 0)."""
     return _gs_beam_multi(
-        pairs.select(F.lit(0).alias("cfg"), "qid", "u"),
+        qids.crossJoin(seeds).select(F.lit(0).alias("cfg"), "qid", "u"),
         {0: b},
         qarr,
         tarr,

@@ -1012,14 +1012,12 @@ def mg_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def mg_partial(
-    tok: DataFrame, m: int = _MG_M, sentinel: bool = False
-) -> DataFrame:
-    """Canonical Misra-Gries summary of ONE token frame: exact counts,
-    truncation offset d = the (m+1)-th largest count (md5 tie-break,
-    0 when distinct keys <= m), counters c = f − d for f > d.  Emits
-    (tok, c, d) with the offset repeated per row so a partial is
-    self-describing for the merge law.
+def mg_partial(tok: DataFrame, sentinel: bool = False) -> DataFrame:
+    """Canonical Misra-Gries summary of ONE token frame, capacity
+    m = ``_MG_M``: exact counts, truncation offset d = the (m+1)-th
+    largest count (md5 tie-break, 0 when distinct keys <= m), counters
+    c = f − d for f > d.  Emits (tok, c, d) with the offset repeated per
+    row so a partial is self-describing for the merge law.
 
     sentinel=True (ADVICE r10): a degenerate frame whose top m+1 counts
     all tie has NO row with f > d, so the partial would be empty and its
@@ -1038,7 +1036,7 @@ def mg_partial(
     )
     dv = (
         cnt.withColumn("rn", rn)
-        .filter(F.col("rn") == m + 1)
+        .filter(F.col("rn") == _MG_M + 1)
         .agg(F.coalesce(F.max("f"), F.lit(0)).alias("d"))
     )
     part = (

@@ -10,10 +10,14 @@ that decides how such a run is set up and torn down:
   (``replay``, ``drain_to_memory``, ``drain_partials``).
 - **Replay safety.** foreachBatch output is a bid-keyed overwrite, read
   back only from ``_SUCCESS``-committed dirs (``drain_partials``).
+- **Partials read.** ``drain_partials`` returns the committed partials
+  as one frame of the schema its caller declares and each partial is
+  checked against — no schema inference, no footer job.
 - **Release.** What this module created is removed when the run ends: the
   staged source and the checkpoint in a ``finally``, the memory-sink view
   as soon as its frame is captured.  Caller-owned dirs are never removed,
-  and neither is a partials dir, which the returned frame reads lazily.
+  and neither is a partials dir, which the returned frame reads lazily
+  (ROADMAP Direction 4).
 """
 
 from __future__ import annotations
@@ -172,21 +176,24 @@ def drain_partials(
     spark: SparkSession,
     staged: DataFrame,
     per_batch: Callable[[DataFrame, int], DataFrame | None],
+    schema: T.StructType | str,
     *,
     work_dir: str | None = None,
     buckets: int | None = None,
-    parts: str = "partials",
-    tag: str = "b",
-) -> list[str]:
-    """Replay ``staged`` one file per trigger and write each micro-batch's
+) -> DataFrame:
+    """Replay ``staged`` one file per trigger, write each micro-batch's
     ``per_batch(batch, bid)`` frame as the bid-keyed overwrite
-    ``<work_dir>/<parts>/<tag><bid>`` (``_write_partial_bid``).  Returns
-    the committed partial dirs (``_committed_partial_dirs``); an empty
-    list means no batch wrote a row, and the caller returns its
-    typed-empty frame.  A ``None`` from ``per_batch`` writes nothing for
-    that batch.  ``parts``/``tag`` name the layout: ``partials/b{bid}``
-    unless the runner keeps its own (``run_ioc_aging_stream``'s
-    ``state/v{bid}`` shards).
+    ``<work_dir>/partials/b<bid>`` (``_write_partial_bid``; ``None``
+    writes nothing), and return the committed partials as one frame.
+
+    ``schema`` (``StructType`` or DDL) is the partials' declared schema.
+    Each partial is checked against it on the driver before its write
+    (``simpleString`` equality, no job); a mismatch raises ``ValueError``
+    naming both.  The committed dirs are read with it, so the read infers
+    nothing and runs no footer job; with no committed data file the
+    result is ``spark.createDataFrame([], schema)``.  The caller's merge
+    sees one schema either way, and its empty answer is the merge of
+    zero rows.
 
     REPLAY-SAFE: foreachBatch is at-least-once.  After a crash between a
     partial write and its epoch commit, Spark re-fires the same bid with
@@ -194,14 +201,20 @@ def drain_partials(
     instead of adding a second one.
 
     ``work_dir`` holds ``src/`` (staged once, as ``_stage`` describes; a
-    rerun reuses it), ``ckpt/`` and the partials.  A caller-owned
+    rerun reuses it), ``ckpt/`` and ``partials/``.  A caller-owned
     ``work_dir`` survives whole, so a crashed run resumes on it.  Without
     one the dir is made here, and its ``src/`` and ``ckpt/`` are removed
-    when the run ends."""
+    when the run ends; ``partials/`` stays, because the returned frame
+    reads it lazily (ROADMAP Direction 4)."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    declared = schema.simpleString()
     created = work_dir is None
     if created:
         work_dir = tempfile.mkdtemp(prefix="stream_")
-    src, ckpt, out = (os.path.join(work_dir, d) for d in ("src", "ckpt", parts))
+    src, ckpt, out = (
+        os.path.join(work_dir, d) for d in ("src", "ckpt", "partials")
+    )
     os.makedirs(out, exist_ok=True)
     try:
         if not os.path.isdir(src):
@@ -209,8 +222,15 @@ def drain_partials(
 
         def fold(batch: DataFrame, bid: int) -> None:
             part = per_batch(batch, bid)
-            if part is not None:
-                _write_partial_bid(part, out, bid, tag)
+            if part is None:
+                return
+            got = part.schema.simpleString()
+            if got != declared:
+                raise ValueError(
+                    f"drain_partials: partial schema {got} does not match"
+                    f" the declared {declared}"
+                )
+            _write_partial_bid(part, out, bid)
 
         drain(
             spark,
@@ -218,16 +238,19 @@ def drain_partials(
             .writeStream.foreachBatch(fold),
             ckpt,
         )
-        return _committed_partial_dirs(out, tag)
+        dirs = _committed_partial_dirs(out)
     finally:
         if created:
             shutil.rmtree(src, ignore_errors=True)
             shutil.rmtree(ckpt, ignore_errors=True)
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*dirs)
 
 
-def _write_partial_bid(df: DataFrame, out_dir: str, bid: int, tag: str = "b") -> None:
+def _write_partial_bid(df: DataFrame, out_dir: str, bid: int) -> None:
     """Write a micro-batch's partial output keyed BY batch id
-    (overwrite of ``<tag><bid>/``, ``b{bid}/`` by default) — foreachBatch is at-least-once, so a
+    (overwrite of ``b{bid}/``) — foreachBatch is at-least-once, so a
     blind append double-counts a replayed batch; an overwrite of the
     bid's own subdir makes the replay recompute the identical partial
     instead.
@@ -239,26 +262,25 @@ def _write_partial_bid(df: DataFrame, out_dir: str, bid: int, tag: str = "b") ->
     merge unions as zero rows — identical result, half the jobs.
     Folds with side semantics beyond the write (sentinel rows,
     crash injection, model serving) keep their guards."""
-    df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{tag}{bid}"))
+    df.write.mode("overwrite").parquet(os.path.join(out_dir, f"b{bid}"))
 
 
-def _committed_partial_dirs(out_dir: str, tag: str = "b") -> list[str]:
+def _committed_partial_dirs(out_dir: str) -> list[str]:
     """Bid subdirs whose write COMMITTED (Spark's ``_SUCCESS`` marker) —
     a half-written partial from a crash mid-write is invisible to the
     fold, and its replay overwrites it.
 
     ADVICE-r14: an EMPTY batch commits a dir holding only ``_SUCCESS``
-    (empty-relation plans write zero part files), which
-    ``spark.read.parquet`` cannot infer a schema from — skip dirs with
-    no data file (they union as zero rows by definition), so an
-    all-empty run returns [] and the caller's typed-empty fallback
-    fires instead of UNABLE_TO_INFER_SCHEMA."""
+    (empty-relation plans write zero part files) — skip dirs with no
+    data file (they union as zero rows by definition), so an all-empty
+    run returns [] and ``drain_partials`` hands back its typed-empty
+    frame instead of reading a list of no paths."""
     out = []
     for name in sorted(os.listdir(out_dir)):
         p = os.path.join(out_dir, name)
         if (
-            name.startswith(tag)
-            and name[len(tag):].isdigit()
+            name.startswith("b")
+            and name[1:].isdigit()
             and os.path.exists(os.path.join(p, "_SUCCESS"))
             and any(
                 f.startswith("part-") and not f.endswith(".crc")

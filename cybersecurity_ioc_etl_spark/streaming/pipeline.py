@@ -17,7 +17,9 @@ Drain contract.  Every runner here starts its query through
   checkpoint keep on every resume;
 - replay-safe output: foreachBatch results go through ``drain_partials``
   as bid-keyed overwrites folded from ``_SUCCESS``-committed dirs, never
-  blind appends, so an at-least-once re-fire cannot double-count;
+  blind appends, so an at-least-once re-fire cannot double-count; it
+  returns them as one frame of the schema the runner declares, so a
+  runner only merges, and its empty answer is the merge of zero rows;
 - release: the staged source and the checkpoint the drain module made
   are removed when the run ends, and a memory-sink view is dropped as
   soon as ``drain_to_memory`` has captured its frame.  A partials dir
@@ -331,15 +333,14 @@ def run_stream_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             return None
         return ann_bucketed_topk_frame(corpus.unionByName(batch))
 
-    # two micro-batches of the 4 query vectors
-    dirs = drain_partials(
-        spark, e.filter(F.col("vec_id") < 4).repartition(2), answer
-    )
-    # a quiet query stream writes nothing: hand back the plan's schema
-    # with zero rows — the serving path's answer to an empty trigger
-    if not dirs:
-        return spark.createDataFrame([], ann_bucketed_topk_frame(e).schema)
-    return spark.read.parquet(*dirs).localCheckpoint(eager=True)
+    # two micro-batches of the 4 query vectors; a quiet query stream
+    # writes nothing and answers zero rows of the declared schema
+    return drain_partials(
+        spark,
+        e.filter(F.col("vec_id") < 4).repartition(2),
+        answer,
+        "qid bigint, vec_id bigint, rnk bigint, cosine_sim double",
+    ).localCheckpoint(eager=True)
 
 
 def run_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,11 +371,12 @@ def run_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     def score(batch: DataFrame, _bid: int) -> DataFrame | None:
         return None if batch.isEmpty() else classify_docs(batch, grid)
 
-    dirs = drain_partials(spark, test.repartition(2), score)
-    if dirs:
-        pred = spark.read.parquet(*dirs)
-    else:
-        pred = spark.createDataFrame([], classify_docs(test, grid).schema)
+    pred = drain_partials(
+        spark,
+        test.repartition(2),
+        score,
+        "doc_id bigint, lang string, pred_lang string",
+    )
     return pred.groupBy("lang", "pred_lang").agg(F.count("*").alias("n_docs"))
 
 
@@ -401,17 +403,12 @@ def run_stream_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     stats = value_stats(e).localCheckpoint(eager=True)
 
-    def score(batch: DataFrame, _bid: int) -> DataFrame:
-        return score_value_outliers(batch, stats)
-
-    dirs = drain_partials(spark, e.repartition(2), score)
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "event_type string, n_outliers bigint, n_events bigint,"
-            " max_z double",
-        )
-    parts = spark.read.parquet(*dirs)
+    parts = drain_partials(
+        spark,
+        e.repartition(2),
+        lambda batch, _bid: score_value_outliers(batch, stats),
+        "event_type string, n_outliers bigint, n_events bigint, max_z double",
+    )
     return parts.groupBy("event_type").agg(
         F.sum("n_outliers").cast("bigint").alias("n_outliers"),
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -441,9 +438,9 @@ def run_ioc_aging_stream(
     touches O(batch distinct keys), never the history.
 
     REPLAY-SAFE: shards are ``drain_partials`` bid-keyed overwrites
-    (``state/v{bid}``, committed iff Spark's ``_SUCCESS`` marker
+    (``partials/b{bid}``, committed iff Spark's ``_SUCCESS`` marker
     exists), so a re-fired bid recomputes its own shard instead of
-    double-counting.  Pass ``work_dir`` to make src/state/checkpoint
+    double-counting.  Pass ``work_dir`` to make src/partials/checkpoint
     survive a restart (the kill-resume test in tests/test_streaming.py),
     ``fail_at_bid`` to inject a crash exactly in the vulnerable window
     (after the shard write, before the epoch commits)."""
@@ -463,21 +460,18 @@ def run_ioc_aging_stream(
         )
         if bid != fail_at_bid:
             return part
-        _write_partial_bid(part, os.path.join(work_dir, "state"), bid, "v")
+        _write_partial_bid(part, os.path.join(work_dir, "partials"), bid)
         raise RuntimeError(f"injected crash after state write of batch {bid}")
 
-    dirs = drain_partials(
-        spark, rows.repartition(2), shard, work_dir=work_dir,
-        parts="state", tag="v",
-    )
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "ioc string, type string, first_seen string, last_seen string,"
-            " n_sightings bigint, n_sources bigint",
-        )
     state = (
-        spark.read.parquet(*dirs)
+        drain_partials(
+            spark,
+            rows.repartition(2),
+            shard,
+            "ioc string, type string, source string, first_seen string,"
+            " last_seen string, n bigint",
+            work_dir=work_dir,
+        )
         .groupBy("ioc", "type", "source")
         .agg(
             F.min("first_seen").alias("first_seen"),
@@ -521,11 +515,7 @@ def run_stream_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             hash_bucket(F.col("doc_id"), 10000) < mixture_keep_bp()
         )
 
-    dirs = drain_partials(spark, d.repartition(2), keep)
-    if dirs:
-        kept = spark.read.parquet(*dirs)
-    else:
-        kept = spark.createDataFrame([], d.schema)
+    kept = drain_partials(spark, d.repartition(2), keep, d.schema)
     return kept.groupBy("source").agg(
         F.count("*").alias("n_kept"),
         F.sum("n_chars").cast("bigint").alias("kept_chars"),
@@ -823,10 +813,13 @@ def run_stream_countmin(
         _write_partial_bid(part, os.path.join(work_dir, "partials"), bid)
         raise RuntimeError(f"injected crash after partial write of batch {bid}")
 
-    dirs = drain_partials(spark, d.repartition(4), fold, work_dir=work_dir)
-    if not dirs:
-        return spark.createDataFrame([], "i bigint, b bigint, c bigint")
-    parts = spark.read.parquet(*dirs)
+    parts = drain_partials(
+        spark,
+        d.repartition(4),
+        fold,
+        "i bigint, b bigint, c bigint",
+        work_dir=work_dir,
+    )
     return parts.groupBy("i", "b").agg(F.sum("c").cast("bigint").alias("c"))
 
 
@@ -881,13 +874,13 @@ def run_stream_cdc_retraction(
             ).alias("s"),
         )
 
-    dirs = drain_partials(spark, ins.unionByName(dels).repartition(4), fold)
-    if not dirs:
-        return spark.createDataFrame(
-            [], "o_orderpriority string, dn bigint, ds decimal(38,0)"
-        )
     return (
-        spark.read.parquet(*dirs)
+        drain_partials(
+            spark,
+            ins.unionByName(dels).repartition(4),
+            fold,
+            "o_orderpriority string, n bigint, s decimal(38,0)",
+        )
         .groupBy("o_orderpriority")
         .agg(
             F.sum("n").cast("bigint").alias("dn"),
@@ -977,18 +970,13 @@ def _run_stream_count_fold(
     Scale shape: per trigger one map-side-combined count bounded by the
     batch's distinct key combinations; the end-of-stream fold touches
     (batches × distinct keys) partial rows, never the staged stream."""
-    dirs = drain_partials(
-        spark,
-        staged.repartition(4),
-        lambda batch, _bid: batch.groupBy(*keys).agg(F.count("*").alias("c")),
-    )
-    if not dirs:
-        fields = ", ".join(
-            f"{k} {staged.schema[k].dataType.simpleString()}" for k in keys
-        )
-        return spark.createDataFrame([], f"{fields}, c bigint")
+    def fold(batch: DataFrame, _bid: int) -> DataFrame:
+        return batch.groupBy(*keys).agg(F.count("*").alias("c"))
+
     return (
-        spark.read.parquet(*dirs)
+        drain_partials(
+            spark, staged.repartition(4), fold, fold(staged, 0).schema
+        )
         .groupBy(*keys)
         .agg(F.sum("c").cast("bigint").alias("c"))
     )
@@ -1055,14 +1043,12 @@ def run_stream_span_occurrences(
         )
         .select("doc_id", "text")
     )
-    dirs = drain_partials(
+    return drain_partials(
         spark,
         d.repartition(4),
         lambda batch, _bid: _span_occ(_span_tokens(batch)),
+        "doc_id bigint, p int, h bigint",
     )
-    if not dirs:
-        return spark.createDataFrame([], "doc_id bigint, p int, h bigint")
-    return spark.read.parquet(*dirs).select("doc_id", "p", "h")
 
 
 def run_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1082,19 +1068,13 @@ def run_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    dirs = drain_partials(
+    parts = drain_partials(
         spark,
         d.repartition(4),
         lambda batch, _bid: kmv_bottom_k(kmv_token_hashes(batch)),
+        "source string, h bigint",
     )
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "source string, k_used bigint, kth_hash bigint,"
-            " est_distinct double",
-        )
-    parts = spark.read.parquet(*dirs).distinct()
-    return kmv_estimate(kmv_bottom_k(parts))
+    return kmv_estimate(kmv_bottom_k(parts.distinct()))
 
 
 def run_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1199,14 +1179,9 @@ def run_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bid", F.lit(bid)
         )
 
-    dirs = drain_partials(spark, staged, fold, buckets=4)
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "token string, est_count bigint, exact_count bigint,"
-            " err_bound bigint, bound_ok boolean, n_missed_heavy bigint",
-        )
-    parts = spark.read.parquet(*dirs)
+    parts = drain_partials(
+        spark, staged, fold, "tok string, c bigint, d bigint, bid int", buckets=4
+    )
     d_sum = (
         parts.select("bid", "d")
         .distinct()
@@ -1274,16 +1249,12 @@ def run_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    dirs = drain_partials(
-        spark, d.repartition(4), lambda batch, _bid: hll_batch_registers(batch)
+    parts = drain_partials(
+        spark,
+        d.repartition(4),
+        lambda batch, _bid: hll_batch_registers(batch),
+        "source string, idx bigint, r bigint",
     )
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "source string, m_occupied bigint, r_max bigint,"
-            " s_scaled bigint, est_distinct double",
-        )
-    parts = spark.read.parquet(*dirs)
     merged = parts.groupBy("source", "idx").agg(F.max("r").alias("r"))
     return hll_estimate(merged)
 
@@ -1348,14 +1319,14 @@ def run_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sm",
         )
 
-    dirs = drain_partials(spark, e.repartition(3), partial_bars)
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "hour_start string, event_type string, open double, high double,"
-            " low double, close double, volume bigint, total_value double",
-        )
-    parts = spark.read.parquet(*dirs)
+    parts = drain_partials(
+        spark,
+        e.repartition(3),
+        partial_bars,
+        "hour_start string, event_type string, f_ts timestamp, f_eid bigint,"
+        " f_vi bigint, l_ts timestamp, l_eid bigint, l_vi bigint, hi bigint,"
+        " lo bigint, cnt bigint, sm bigint",
+    )
     merged = parts.groupBy("hour_start", "event_type").agg(
         F.min(F.struct("f_ts", "f_eid", "f_vi")).getField("f_vi").alias("o_vi"),
         F.max("hi").alias("hi"),
@@ -1388,14 +1359,13 @@ def run_stream_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pruning import bloom_audit_row, bloom_bits, bloom_dim
 
     dim = bloom_dim(spark, sf_dir)
-    dirs = drain_partials(
-        spark, dim.repartition(4), lambda batch, _bid: bloom_bits(batch)
+    bits = drain_partials(
+        spark,
+        dim.repartition(4),
+        lambda batch, _bid: bloom_bits(batch),
+        "pos bigint",
     )
-    if dirs:
-        bits = spark.read.parquet(*dirs).distinct()
-    else:
-        bits = spark.createDataFrame([], "pos bigint")
-    return bloom_audit_row(spark, sf_dir, dim, bits)
+    return bloom_audit_row(spark, sf_dir, dim, bits.distinct())
 
 
 def run_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1410,18 +1380,15 @@ def run_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    dirs = drain_partials(
-        spark, e.repartition(4), lambda batch, _bid: drift_partial_sums(batch)
-    )
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "label string, n_a bigint, n_b bigint, centroid_shift double",
-        )
     # merge partials by ADDITION at the (label, era, i) grain first —
     # drift_from_sums then folds eras exactly like the batch pass
     parts = (
-        spark.read.parquet(*dirs)
+        drain_partials(
+            spark,
+            e.repartition(4),
+            lambda batch, _bid: drift_partial_sums(batch),
+            "label int, era bigint, i int, s bigint, n bigint",
+        )
         .groupBy("label", "era", "i")
         .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
     )
@@ -1467,9 +1434,9 @@ def run_stream_topk_points(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("event_type", "vi", "ts", "event_id")
         )
 
-    dirs = drain_partials(spark, e.repartition(4), fold)
-    if not dirs:
-        return spark.createDataFrame(
-            [], "event_type string, vi bigint, ts timestamp, event_id bigint"
-        )
-    return spark.read.parquet(*dirs)
+    return drain_partials(
+        spark,
+        e.repartition(4),
+        fold,
+        "event_type string, vi bigint, ts timestamp, event_id bigint",
+    )

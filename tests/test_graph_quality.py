@@ -138,3 +138,18 @@ def test_louvain_pair_fold_raises_past_its_edge_ceiling(spark):
     )
     with pytest.raises(Exception, match="exceed the"):
         _lv_pair_labels(edges, weighted=False).collect()
+
+
+def test_louvain_converged_fold_raises_past_its_edge_ceiling(spark):
+    """The converged-level fold runs in one task over the collected edge
+    list too: past the same ceiling it must fail loudly."""
+    from cybersecurity_ioc_etl_spark.operators.graph import (
+        _LV_FOLD_MAX_EDGES,
+        _lvc_pair_rows,
+    )
+
+    edges = spark.range(_LV_FOLD_MAX_EDGES + 1).selectExpr(
+        "id AS a", "id + 1 AS b"
+    )
+    with pytest.raises(Exception, match="exceed the"):
+        _lvc_pair_rows(edges).collect()

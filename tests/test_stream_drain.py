@@ -17,6 +17,7 @@ import tempfile
 import pyspark.errors
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 import __spark_entry__ as entry
 from cybersecurity_ioc_etl_spark.streaming import monitor
@@ -33,15 +34,16 @@ from cybersecurity_ioc_etl_spark.streaming.stateful import (
 _PKG = pathlib.Path(__file__).resolve().parents[1] / "cybersecurity_ioc_etl_spark"
 
 
-def _fold(spark, dirs):
+_PARTIAL = "k bigint, n bigint"
+
+
+def _count_by_k(batch, _bid):
+    return batch.groupBy("k").agg(F.count("*").alias("n"))
+
+
+def _fold(parts):
     return sorted(
-        map(
-            tuple,
-            spark.read.parquet(*dirs)
-            .groupBy("k")
-            .agg(F.sum("n").alias("n"))
-            .collect(),
-        )
+        map(tuple, parts.groupBy("k").agg(F.sum("n").alias("n")).collect())
     )
 
 
@@ -62,12 +64,37 @@ def test_drain_partials_crash_resume_equals_clean_run(spark, tmp_path):
         return part
 
     with pytest.raises(pyspark.errors.StreamingQueryException):
-        drain_partials(spark, staged, per_batch, work_dir=work)
+        drain_partials(spark, staged, per_batch, _PARTIAL, work_dir=work)
     assert os.path.exists(os.path.join(work, "partials", "b1", "_SUCCESS"))
-    resumed = _fold(spark, drain_partials(spark, staged, per_batch, work_dir=work))
-    clean = _fold(spark, drain_partials(spark, staged, per_batch))
+    resumed = _fold(
+        drain_partials(spark, staged, per_batch, _PARTIAL, work_dir=work)
+    )
+    clean = _fold(drain_partials(spark, staged, per_batch, _PARTIAL))
     assert resumed == clean
     assert sum(n for _, n in resumed) == 40
+
+
+def test_drain_partials_refuses_an_undeclared_partial_schema(spark, tmp_path):
+    """A partial whose schema is not the declared one stops the query
+    at its first write, and the error names both schemas."""
+    staged = spark.range(0, 8, numPartitions=2).selectExpr("id", "id % 3 AS k")
+    work = str(tmp_path / "work")
+    with pytest.raises(pyspark.errors.StreamingQueryException) as err:
+        drain_partials(spark, staged, _count_by_k, "k bigint, n int", work_dir=work)
+    assert "struct<k:bigint,n:bigint>" in str(err.value)
+    assert "struct<k:bigint,n:int>" in str(err.value)
+    assert os.listdir(os.path.join(work, "partials")) == []
+
+
+def test_drain_partials_empty_stream_returns_declared_schema(spark):
+    """No rows staged: zero rows back, with exactly the declared schema."""
+    declared = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("n", T.LongType())]
+    )
+    staged = spark.range(0, 0, numPartitions=2).selectExpr("id", "id % 3 AS k")
+    parts = drain_partials(spark, staged, _count_by_k, declared)
+    assert parts.schema == declared
+    assert parts.count() == 0
 
 
 def _run_totals(spark, src, ckpt, out):
@@ -137,6 +164,10 @@ def test_stream_runs_start_only_in_drain_module():
         "streaming/drain.py",
         "streaming/monitor.py",
     ]
+    # the partials read is drain_partials' alone: no runner lists the
+    # committed dirs or re-reads them with an inferred schema
+    assert _hits(r"_committed_partial_dirs") == ["streaming/drain.py"]
+    assert _hits(r"read\.parquet\(\*dirs\)") == []
     mon = (_PKG / "streaming" / "monitor.py").read_text()
     assert mon.count("availableNow=True") == 1
     assert "availableNow=True" in inspect.getsource(monitor.write_stream_kv_batched)

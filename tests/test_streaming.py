@@ -220,7 +220,7 @@ def test_aging_merge_crash_replay_resume_identical(spark, sf_dir):
     except pyspark.errors.exceptions.captured.StreamingQueryException:
         pass
     # the crashed run left v1 on disk but its epoch uncommitted
-    assert os.path.exists(os.path.join(work, "state", "v1", "_SUCCESS"))
+    assert os.path.exists(os.path.join(work, "partials", "b1", "_SUCCESS"))
     resumed = run_ioc_aging_stream(spark, sf_dir, work_dir=work)
     oneshot = run_ioc_aging_stream(spark, sf_dir)
     assert sorted(map(tuple, resumed.collect())) == sorted(
